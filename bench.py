@@ -19,22 +19,6 @@ from hadoop_gpu_spark.operators.bloom import release_bloom_broadcasts
 from hadoop_gpu_spark.queries import QUERIES
 from hadoop_gpu_spark.utils import release_persisted_frames
 
-# Correctness linkage (amended r14/r15, per the r13 VERDICT and r14
-# ADVICE): HEADLINE queries rotate through queries._DRIVER_WINDOW on
-# the standard 4-round freshness cadence instead of occupying 21 window
-# slots every round. The precise contract: a benched time is backed by
-# a driver row at most 3 rounds old, EXCEPT that a changed query may
-# ride an audited sweep re-pin (__refresh__ in the green manifest,
-# sf0.01 driver-identical comparison) for at most ONE round before its
-# driver slot — mechanized by test_changed_queries_are_windowed plus
-# test_sweep_pins_are_one_round_bridges. q_join_broadcast
-# was retired from HEADLINE earlier for the slot budget (its timing was
-# redundant with q_join_star; the query itself remains registered).
-#
-# Round 6 restores the full r04 21-query macro set (the r05 trim was the
-# documented one-round cost of the full stale-evidence rotation; see the
-# _DRIVER_WINDOW slot accounting — all 21 are windowed this round).
-#
 # Bench record notes — cross-round comparison base:
 # - The official BENCH_r05 record (same-7 total 7.17s) ran CONTENDED: its
 #   own spread column shows 1.63-1.65x on q01/q21 vs r04's <=1.25x, and an

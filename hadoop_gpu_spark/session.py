@@ -1,6 +1,6 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads);
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: ``os.cpu_count()``);
 the same configuration scales to a multi-executor cluster because nothing
 here depends on local mode: partition counts track cores, AQE re-plans at
 runtime, and Arrow is enabled for every pandas-exchange operator.
@@ -20,7 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = str(os.cpu_count() or 1)
+DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
 
 
 def get_spark(
@@ -31,7 +32,7 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's standard config."""
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS

@@ -64,10 +64,6 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
 # keying keeps a rewritten file from serving a stale count. Unbounded on
 # purpose: one entry per distinct small-file path seen by THIS driver —
 # the check only runs when len(files) < target, so the key space is tiny.
-# lowercase NAME on purpose: fingerprint.py hashes ALL_CAPS module
-# constants by value, and hashing mutable cache CONTENTS makes every
-# consumer's fingerprint process-flaky (the r12 incident class — this
-# exact dict reintroduced it for one session when first named in caps).
 _row_group_cache: dict[str, tuple[int, int, int]] = {}
 
 

@@ -19,37 +19,29 @@ def test_oracle_parity(spark, sf_dir, name):
 
 
 def test_all_oracle_queries_registered():
-    missing = set(ORACLES) - set(QUERIES)
-    assert not missing
+    # Every registered query has an oracle and every oracle a query, so
+    # test_oracle_parity covers the whole registry; every benched query
+    # is registered, so no bench time rests on an unproven query.
+    from bench import HEADLINE
+
+    assert set(ORACLES) == set(QUERIES), (
+        f"oracle without query: {sorted(set(ORACLES) - set(QUERIES))}; "
+        f"query without oracle: {sorted(set(QUERIES) - set(ORACLES))}"
+    )
+    missing = [q for q in HEADLINE if q not in QUERIES]
+    assert not missing, f"HEADLINE not registered: {missing}"
 
 
 # ---------------------------------------------------------------------------
-# Round-end gate replica at the driver's own scale. All four r03 driver
-# reds reproduced locally at sf0.01; the default suite only replicates the
-# oracle at sf0.001, which can mask scale-dependent failures (the
-# stream-join row explosion was 13,124-vs-83 at sf0.01). Deselected by
-# default (pytest.ini); run before round end with:
-#   python -m pytest tests/ -m sf01_window -q
+# The same gate at sf0.01. The default suite replicates the oracle at
+# sf0.001 only, which can mask scale-dependent failures (the stream-join
+# row explosion was 13,124-vs-83 at sf0.01). Deselected by default
+# (pytest.ini); run with:
+#   python -m pytest tests/ -m sf01_full -q
 # ---------------------------------------------------------------------------
-def _driver_window():
-    from hadoop_gpu_spark.queries import _DRIVER_WINDOW
-
-    return list(_DRIVER_WINDOW)
-
-
-@pytest.mark.sf01_window
-@pytest.mark.parametrize("name", _driver_window())
-def test_oracle_parity_sf01_window(spark, name):
-    errs = check_query(spark, name, "/root/testdata/sf0.01")
-    assert not errs, f"{name}: " + "; ".join(errs)
-
-
 @pytest.mark.sf01_full
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_oracle_parity_sf01_full(spark, name):
-    # Full-surface assurance at the driver's scale: the window marker
-    # covers the 50 graded slots; this covers everything else too (the
-    # round-4 sweep that proved 108/108).
     errs = check_query(spark, name, "/root/testdata/sf0.01")
     assert not errs, f"{name}: " + "; ".join(errs)
 

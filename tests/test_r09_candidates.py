@@ -24,18 +24,6 @@ CANDIDATES = [
     "q_bucketed_ctas",
     "q_stream_quantiles",
 ]
-STAGED: list[str] = [
-    # The r09 8-gate queue drained in r14 (q_hll_distinct ..
-    # q_nb_lang_confusion graduated together when the r14 window
-    # rotation freed the slots; earlier graduations: q_stream_quantiles
-    # r10; q_bm25_topk, q_semantic_dedup, q_bpe_merges, q_cms_token_freq
-    # r12), and the r15 staged pair (q_ann_ivfpq, q_rerank_tfidf —
-    # tests/test_r15_candidates.py) registered in r16 with window slots.
-    # The r16 builds (q_morelikethis, q_hybrid_rrf, q_ann_ivfpq_residual
-    # — tests/test_r16_candidates.py) also registered late-r16 when the
-    # round continued past the planned r17 handoff, taking the q17/q18/
-    # q19 pre-rotation slots. EMPTY again.
-]
 R14_GRADUATES = [
     "q_hll_distinct",
     "q_stream_cms_freq",
@@ -55,40 +43,17 @@ R16_GRADUATES = [
 def test_candidate_list_matches_registry_constant():
     from hadoop_gpu_spark import queries as q
 
-    assert q.STAGED_CANDIDATES == STAGED
-    # staged means staged: not registered until its window slot opens...
-    assert not set(STAGED) & set(q.QUERIES)
-    assert not set(STAGED) & set(q.ORACLES)
-    # ...and every graduated candidate IS registered with its oracle
-    # bound (window membership is a per-round fact: the r09 trio and
-    # q_stream_quantiles earned their first driver rows in their
-    # registration rounds and have since rotated out; the four r12
-    # registrations earned theirs in CORRECTNESS_r12 — assert the rows
-    # landed green rather than pinning the since-rotated window)
-    graduated = (
-        [n for n in CANDIDATES if n not in STAGED] + R14_GRADUATES + R16_GRADUATES
-    )
+    # every graduated candidate is registered with its oracle bound
+    graduated = CANDIDATES + R14_GRADUATES + R16_GRADUATES
     assert set(graduated) <= set(q.QUERIES) and set(graduated) <= set(q.ORACLES)
     # the two streaming r14 graduates joined the declared streaming set,
     # as their docstrings required
     assert {"q_stream_cms_freq", "q_stream_hll_distinct"} <= q.STREAMING_SNAPSHOT
-    import json
-    import pathlib
-
-    r12 = json.loads(
-        (pathlib.Path(__file__).parent.parent / "CORRECTNESS_r12.json").read_text()
-    )
-    for n in ("q_bm25_topk", "q_semantic_dedup", "q_bpe_merges", "q_cms_token_freq"):
-        row = r12[n]
-        assert row["rows_match"] and row["hash_match"] and not row["err"], (n, row)
 
 
 def test_readme_counts_match_registry():
-    # r12 housekeeping (r11 VERDICT #5, third round running as a stale
-    # hand-count): the README's "N registered queries" / "M staged
-    # candidates" figures are now GENERATED facts — this test greps them
-    # out and compares against the registry, so the stale-count class
-    # dies instead of recurring every registration round.
+    # The README's "N registered queries" figure is a checked fact: this
+    # test greps it out and compares it against the registry.
     import pathlib
     import re
 
@@ -98,11 +63,6 @@ def test_readme_counts_match_registry():
     m = re.search(r"(\d+) registered queries", readme)
     assert m and int(m.group(1)) == len(q.QUERIES), (
         f"README says {m and m.group(1)} registered, registry has {len(q.QUERIES)}"
-    )
-    m = re.search(r"(\d+) staged candidates", readme)
-    assert m and int(m.group(1)) == len(q.STAGED_CANDIDATES), (
-        f"README says {m and m.group(1)} staged, "
-        f"STAGED_CANDIDATES has {len(q.STAGED_CANDIDATES)}"
     )
 
 

@@ -386,10 +386,16 @@ def test_cms_precount_null_tokens_match_occurrence_form(spark):
     occurrence = cms_build(toks, "tok", d=4, w=8).toPandas()
     pre = toks.mapInPandas(_cms_precount, "tok string, __c long")
     weighted = cms_build(pre, "tok", d=4, w=8, weight_col="__c").toPandas()
+    # a null token hashes to a null col_id, so compare sorted frames
+    # (NaN-equal) rather than tuples (NaN != NaN)
+    import pandas as pd
+
     key = ["row_id", "col_id", "cnt"]
-    assert sorted(map(tuple, occurrence[key].values.tolist())) == sorted(
-        map(tuple, weighted[key].values.tolist())
-    )
+
+    def rows(df):
+        return df[key].sort_values(key).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(rows(occurrence), rows(weighted), check_dtype=False)
 
 
 def test_stream_cms_construct_two_scales_then_collect_first(spark, sf_dir):
