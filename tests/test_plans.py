@@ -157,6 +157,16 @@ def test_unigram_logprob_join_unhinted_and_never_shuffles_text(spark, sf_dir):
     assert "text" not in plans.shuffled_columns(df)
 
 
+def test_driver_window_invariants():
+    # No query window remains: __spark_entry__ exposes every registered
+    # query, in registration order, with an oracle for each, so a
+    # correctness run over the entry contract covers the whole registry.
+    import __spark_entry__ as entry
+
+    assert list(entry.queries()) == list(QUERIES)
+    assert set(entry.oracle_sql()) == set(QUERIES)
+
+
 def test_lsh_ann_corpus_vectors_never_shuffle(spark, sf_dir):
     # The q_ann_lsh scale claim, pinned: corpus embeddings (__cv) are
     # consumed at the scan side of the broadcast join — only the tiny
