@@ -17,14 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_gpu_spark.utils import collect_at_most
+
 # Edge lists at or below this size run the label-propagation rounds
-# driver-side (zero per-round Spark jobs); above it, the distributed
-# loop runs. ~1M (src, dst) longs is tens of MB on the driver — far
-# under budget — while the per-round Spark-job overhead it saves
-# (3 jobs x ~0.3-0.7 s x diameter rounds at gate scale) dominates
-# small-graph CC end-to-end. Near-dup pair graphs are candidate-bounded
-# (LSH bucket caps), not corpus-sized, and the gate is a measured
-# count — the kmeans/bpe driver-boundedness contract (r16).
+# driver-side (zero per-round Spark jobs; utils.collect_at_most); above
+# it, the distributed loop runs. ~1M (src, dst) longs is tens of MB on
+# the driver, while the per-round Spark-job overhead it saves (3 jobs x
+# ~0.3-0.7 s x diameter rounds at gate scale) dominates small-graph CC
+# end-to-end. Near-dup pair graphs are candidate-bounded (LSH bucket
+# caps), not corpus-sized.
 DRIVER_CC_MAX_EDGES = 1 << 20
 
 
@@ -37,10 +38,13 @@ def _cc_driver_side(
     bit-faithful to the distributed loop below (including the
     non-converged truncation at max_iter), so the fast path can never
     change output. Python min/< on int and str orders exactly as the
-    engines' BIGINT / binary-collation comparisons."""
+    engines' BIGINT / binary-collation comparisons. A null endpoint
+    joins nothing (SQL equality), so a null node keeps a null label."""
     adj: dict = {}
     for s, d in edge_rows:
-        adj.setdefault(s, []).append(d)
+        nbrs = adj.setdefault(s, [])
+        if s is not None and d is not None:
+            nbrs.append(d)
     labels = {n: n for n in adj}
     for _ in range(max_iter):
         new = {}
@@ -72,18 +76,15 @@ def connected_components(
         .distinct()
         .persist()
     )
-    if edges.count() <= DRIVER_CC_MAX_EDGES:
-        # r16 optimization (guide §1.2; the bpe/kmeans driver contract):
-        # the graph is candidate-pair-bounded and measured small — run
-        # the identical rounds driver-side instead of 3 Spark jobs per
-        # round. Output schema/types mirror the distributed branch.
-        spark = pairs.sparkSession
-        rows = [(r["src"], r["dst"]) for r in edges.collect()]
+    table = collect_at_most(edges, DRIVER_CC_MAX_EDGES)
+    if table is not None:
+        # Output schema/types mirror the distributed branch.
         edges.unpersist(blocking=False)
+        rows = list(zip(table.column("src").to_pylist(), table.column("dst").to_pylist()))
         labels = _cc_driver_side(rows, max_iter)
         node_type = edges.schema["src"].dataType.simpleString()
-        return spark.createDataFrame(
-            sorted(labels.items()),
+        return pairs.sparkSession.createDataFrame(
+            sorted(labels.items(), key=lambda kv: (kv[0] is None, kv[0])),
             schema=f"node {node_type}, component {node_type}",
         )
     labels = (

@@ -12,9 +12,9 @@ happens at the PARTITION level instead of the task level:
 - :class:`HybridOp` — one logical operator with two implementations
   (pandas/numpy CPU path; CuPy/cuDF GPU path) and identical semantics.
   The CPU path is always correct; the GPU path is optional and
-  equivalence-tested against it.
-- :class:`AlphaEstimator` — online α from measured per-batch runtimes
-  (the scheduler's meanCpuMapTime/meanGpuMapTime, JobInProgress.java:326-365).
+  equivalence-tested against it. ``HybridOp.alpha`` is the online α
+  from measured per-batch runtimes (the scheduler's
+  meanCpuMapTime/meanGpuMapTime, JobInProgress.java:326-365).
 - :func:`makespan_split` — the reference's min-makespan scan (:177-193)
   over partition counts.
 - :func:`run_hybrid` — splits a DataFrame's partitions x:y, runs the CPU
@@ -34,7 +34,7 @@ import itertools
 import math
 import time
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -45,30 +45,6 @@ try:  # GPU path availability probe (absent in this container)
     GPU_AVAILABLE = True
 except Exception:  # pragma: no cover - no GPU in CI
     GPU_AVAILABLE = False
-
-
-@dataclass
-class AlphaEstimator:
-    """Online acceleration factor α = meanCPU / meanGPU.
-
-    Mirrors JobInProgress' mean finished-task times: α stays 0 (unknown)
-    until both paths have at least one measurement
-    (JobQueueTaskScheduler.java:171-174).
-    """
-
-    cpu_times: list[float] = field(default_factory=list)
-    gpu_times: list[float] = field(default_factory=list)
-
-    def record(self, path: str, seconds: float) -> None:
-        (self.cpu_times if path == "cpu" else self.gpu_times).append(seconds)
-
-    @property
-    def alpha(self) -> float:
-        if not self.cpu_times or not self.gpu_times:
-            return 0.0
-        return (sum(self.cpu_times) / len(self.cpu_times)) / (
-            sum(self.gpu_times) / len(self.gpu_times)
-        )
 
 
 def cpu_gate(pending: int, alpha: float, n_gpu: int) -> bool:

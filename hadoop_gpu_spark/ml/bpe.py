@@ -168,23 +168,22 @@ def _train_on_counts(
     driver-side merge list; every intermediate checkpoint is consumed
     here and released in the ``finally``.
 
-    r16 optimization (guide §1.2 "the distributed algorithm" + the
-    kmeans/pq_train driver contract): the materialized vocab frame is
-    counted once; at or below DRIVER_TRAIN_MAX_WORDS distinct words the
-    identical iteration runs driver-side (the n_merges x ~0.4 s
-    per-iteration Spark-job overhead is the entire training cost at
-    gate scale), above it the distributed loop is unchanged. Only a
-    vocab-bounded, threshold-gated list ever crosses the driver — the
-    same boundedness class as the k-row kmeans collect."""
-    from hadoop_gpu_spark.utils import release_local_checkpoint
+    At or below DRIVER_TRAIN_MAX_WORDS distinct words the identical
+    iteration runs driver-side on the collected vocab
+    (utils.collect_at_most; the n_merges x ~0.4 s per-iteration
+    Spark-job overhead is the entire training cost at gate scale),
+    above it the distributed loop runs."""
+    from hadoop_gpu_spark.utils import collect_at_most, release_local_checkpoint
 
     cur = wc.select(_word_seq("word").alias("seq"), "wc").localCheckpoint(eager=True)
     checkpoints = [cur]
     merges: list[tuple[int, str, str, int]] = []
     try:
-        if cur.count() <= DRIVER_TRAIN_MAX_WORDS:
+        table = collect_at_most(cur, DRIVER_TRAIN_MAX_WORDS)
+        if table is not None:
             return _train_driver_side(
-                [(r["seq"], r["wc"]) for r in cur.collect()], n_merges
+                list(zip(table.column("seq").to_pylist(), table.column("wc").to_pylist())),
+                n_merges,
             )
         for step in range(1, n_merges + 1):
             best = (

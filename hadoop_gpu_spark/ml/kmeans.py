@@ -28,14 +28,11 @@ from pyspark.sql import functions as F
 
 from hadoop_gpu_spark.functions.vectors import euclidean_sq
 
-# Driver-boundedness contract (the bpe/cc/pq_train pattern, r16): at or
-# below this many points the IDENTICAL Lloyd iterations run driver-side —
-# but ONLY when every feature value is an integer-valued double small
-# enough that every partial sum is exact in float64 (see
-# _driver_kmeans_is_exact). Above the threshold, or off the integer
-# lattice, the distributed loop below runs byte-for-byte unchanged.
-# 2^20 points x 2 features x 8 B = 16 MB through the driver at most —
-# the same boundedness class as DRIVER_PQ_TRAIN_MAX_ROWS.
+# At or below this many points the IDENTICAL Lloyd iterations run
+# driver-side (utils.collect_at_most) — but ONLY when every feature value
+# is an integer-valued double small enough that every partial sum is
+# exact in float64 (see _driver_kmeans_is_exact). 2^20 points x 2
+# features x 8 B = 16 MB through the driver at most.
 DRIVER_KMEANS_MAX_POINTS = 1 << 20
 # |v| <= 2^31 and n <= 2^20 terms bounds any partial sum by 2^51 < 2^53,
 # so float64 addition never rounds: EVERY summation order (Spark's
@@ -148,59 +145,43 @@ def kmeans_dataframe(
     cents = [tuple(r) for r in init_centroids.select("cluster_id", *feature_cols).collect()]
     spark = points.sparkSession
 
-    # r16 optimization (the bpe/cc/pq_train driver contract): probe the
-    # points with an Arrow-collected LIMIT before paying the persist.
     # At or below DRIVER_KMEANS_MAX_POINTS, AND when every feature value
     # sits on the exact-integer float64 lattice (the q_kmeans gate shape:
     # floor(x * 1e6) doubles — the same property its DuckDB oracle
-    # already relies on), the IDENTICAL iterations run driver-side:
-    # max_iter scans + max_iter k-row aggregate jobs collapse into ONE
-    # bounded read. Off the lattice or above the threshold the
-    # distributed loop below runs byte-for-byte unchanged.
-    # Fast path only for float feature columns: a DecimalType feature
+    # already relies on), the IDENTICAL iterations run driver-side on the
+    # collected points (utils.collect_at_most); otherwise the distributed
+    # loop below runs. Float feature columns only: a DecimalType feature
     # would pass the integrality check yet diverge — the distributed
     # loop's avg() is exact decimal arithmetic there, while the replay's
     # float64 quotient rounds. Float32 is safe (exact widening to
     # float64 on both sides).
     from pyspark.sql.types import DoubleType, FloatType
 
+    from hadoop_gpu_spark.utils import collect_at_most
+
     float_features = all(
         isinstance(points.schema[c].dataType, (DoubleType, FloatType))
         for c in feature_cols
     )
-    if cents and float_features:
-        # r17 (ADVICE r16): a 1024-row sample is lattice-checked BEFORE
-        # the full bounded collect, so an off-lattice input (which can
-        # never take the fast path) pays one tiny CollectLimit instead
-        # of an up-to-2^20-row Arrow collect that gets discarded. The
-        # full probe still re-checks every row — the sample is an
-        # early-out, not the decision.
-        sample = points.select(*feature_cols).limit(1024).toPandas()
-        sample_ok = _driver_kmeans_is_exact(
-            sample[list(feature_cols)].to_numpy(dtype=np.float64)
-        )
-    else:
-        sample_ok = False
-    if sample_ok:
-        probe = (
-            points.select(*feature_cols)
-            .limit(DRIVER_KMEANS_MAX_POINTS + 1)
-            .toPandas()
-        )
-        if len(probe) <= DRIVER_KMEANS_MAX_POINTS:
-            pts = probe[list(feature_cols)].to_numpy(dtype=np.float64)
-            if _driver_kmeans_is_exact(pts):
-                cents, counts = _kmeans_driver_side(
-                    pts, cents, len(feature_cols), max_iter, eps
-                )
-                rows = [
-                    (int(cid), *[float(v) for v in vals], int(counts.get(cid, 0)))
-                    for cid, *vals in cents
-                ]
-                return spark.createDataFrame(
-                    rows,
-                    ["cluster_id", *[f"c_{c}" for c in feature_cols], "n_points"],
-                )
+    table = (
+        collect_at_most(points.select(*feature_cols), DRIVER_KMEANS_MAX_POINTS)
+        if cents and float_features
+        else None
+    )
+    if table is not None:
+        pts = table.to_pandas().to_numpy(dtype=np.float64)
+        if _driver_kmeans_is_exact(pts):
+            cents, counts = _kmeans_driver_side(
+                pts, cents, len(feature_cols), max_iter, eps
+            )
+            rows = [
+                (int(cid), *[float(v) for v in vals], int(counts.get(cid, 0)))
+                for cid, *vals in cents
+            ]
+            return spark.createDataFrame(
+                rows,
+                ["cluster_id", *[f"c_{c}" for c in feature_cols], "n_points"],
+            )
 
     points = points.persist()
     try:

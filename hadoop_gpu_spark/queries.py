@@ -1187,25 +1187,10 @@ def q_kvjob_wordcount_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_gpu_spark.streaming import (
-        events_stream,
-        start_skipping_empty_batches,
-        windowed_counts,
-    )
+    from hadoop_gpu_spark.streaming import drain_to_memory, events_stream, windowed_counts
 
-    name = "q_stream_hourly_sink"
     agg = windowed_counts(events_stream(spark, sf_dir))
-    # complete mode emits the full (unchanged) state every batch — the
-    # skipped zero-data batch cannot alter the drained table
-    q = start_skipping_empty_batches(
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        spark,
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(agg, "q_stream_hourly_sink")
 
 
 # ---------------------------------------------------------------------------
@@ -3896,28 +3881,17 @@ def q_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
-    from hadoop_gpu_spark.streaming import events_stream, stream_stream_join
+    from hadoop_gpu_spark.streaming import drain_to_memory, events_stream, stream_stream_join
 
     joined = stream_stream_join(
         events_stream(spark, sf_dir), left_type="view", right_type="click", within_minutes=120
     )
-    name = f"q_stream_join_sink_{uuid.uuid4().hex[:8]}"
     # append-mode INNER stream-stream join emits pairs as they match
     # during data batches; the zero-data finalize batch only evicts
     # state — safe to skip (start_skipping_empty_batches). Measured at
     # sf0.1: the empty batch was ~2.9 s of planning + state-store
     # commits across 128 store instances for zero output rows.
-    from hadoop_gpu_spark.streaming import start_skipping_empty_batches
-
-    q = start_skipping_empty_batches(
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True),
-        spark,
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(joined, f"q_stream_join_sink_{uuid.uuid4().hex[:8]}", mode="append")
 
 
 # ---------------------------------------------------------------------------

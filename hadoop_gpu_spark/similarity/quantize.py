@@ -412,12 +412,11 @@ SQ8_SQL = """
 PQ_TRAIN_SCALE = 1_000_000
 
 # Quantized (vid, sub, d*) training rows at or below this count run the
-# Lloyd iterations driver-side (zero per-iteration Spark jobs); above
-# it, the distributed loop runs. 1 Mi rows x (sub_dim+2) int64s is tens
-# of MB — the pq_train docstring already directs production callers to
-# train on a sample, so the threshold is the sample-size regime where
-# per-iteration job overhead dominates (r16; the bpe/cc/kmeans
-# driver-boundedness contract).
+# Lloyd iterations driver-side (zero per-iteration Spark jobs;
+# utils.collect_at_most); above it, the distributed loop runs. 1 Mi rows
+# x (sub_dim+2) int64s is tens of MB — the pq_train docstring already
+# directs production callers to train on a sample, so the threshold is
+# the sample-size regime where per-iteration job overhead dominates.
 DRIVER_PQ_TRAIN_MAX_ROWS = 1 << 20
 
 
@@ -511,7 +510,7 @@ def pq_train(
     through the driver (the k-means contract). Production PQ trains on a
     sample; pass a sampled df for that.
     """
-    from hadoop_gpu_spark.utils import release_local_checkpoint
+    from hadoop_gpu_spark.utils import collect_at_most, release_local_checkpoint
 
     spark = df.sparkSession
     d_cols = [f"d{d}" for d in range(sub_dim)]
@@ -537,21 +536,17 @@ def pq_train(
     # checkpointed blocks are explicitly released in the finally below
     # (the r06 ADVICE leak — they otherwise stay resident for the session
     # lifetime).
-    # r16 optimization (the bpe/kmeans/cc driver contract): probe the
-    # quantized training rows with an Arrow-collected LIMIT BEFORE
-    # paying the checkpoint materialization — the fast path reads them
-    # exactly once. At or below the threshold the IDENTICAL
-    # exact-lattice iterations run driver-side (same md5-ordered init,
-    # same first-min/lowest-cluster argmin, same floor-division
-    # update); above it (production trains on a sample, but unsampled
-    # callers exist) the probe stops early and the distributed loop
-    # below runs byte-for-byte unchanged.
-    probe = rows.limit(DRIVER_PQ_TRAIN_MAX_ROWS + 1).toPandas()
-    if len(probe) <= DRIVER_PQ_TRAIN_MAX_ROWS:
+    # At or below DRIVER_PQ_TRAIN_MAX_ROWS the IDENTICAL exact-lattice
+    # iterations run driver-side on the collected rows
+    # (utils.collect_at_most), before any checkpoint is paid for; above
+    # it (production trains on a sample, but unsampled callers exist)
+    # the distributed loop below runs.
+    table = collect_at_most(rows, DRIVER_PQ_TRAIN_MAX_ROWS)
+    if table is not None:
         data = list(
             zip(
-                (int(v) for v in probe["sub"]),
-                zip(*[probe[c].astype("int64").tolist() for c in d_cols]),
+                table.column("sub").to_pylist(),
+                zip(*[table.column(c).to_pylist() for c in d_cols]),
             )
         )
         book = _pq_train_driver_side(data, n_sub, sub_dim, n_cent, iters)

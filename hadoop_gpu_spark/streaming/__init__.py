@@ -263,6 +263,30 @@ def drain_to_memory(stream_df: DataFrame, name: str, mode: str | None = None) ->
     return stream_df.sparkSession.table(name)
 
 
+def _drain_to_snapshot(agg: DataFrame, out_dir: str, transform=None) -> DataFrame:
+    """Drain a streaming aggregate with availableNow in complete mode into
+    a foreachBatch sink that OVERWRITES a parquet snapshot at ``out_dir``
+    each micro-batch (through ``transform`` first, if given); return the
+    final snapshot read back as a batch frame. The snapshot-sink shape
+    the sketch family and streaming top-k share: overwrite-per-batch
+    makes replays idempotent, and the skipped empty batch would only
+    re-write an identical snapshot (state unchanged by no data) — see
+    start_skipping_empty_batches."""
+
+    def sink(batch_df: DataFrame, _batch_id: int) -> None:
+        out = transform(batch_df) if transform is not None else batch_df
+        out.write.mode("overwrite").parquet(out_dir)
+
+    q = start_skipping_empty_batches(
+        agg.writeStream.foreachBatch(sink)
+        .outputMode("complete")
+        .trigger(availableNow=True),
+        agg.sparkSession,
+    )
+    q.awaitTermination()
+    return agg.sparkSession.read.parquet(out_dir)
+
+
 def exact_dedup_stream(
     stream: DataFrame, text_col: str = "props", watermark: str = "2 hours"
 ) -> DataFrame:
@@ -352,27 +376,15 @@ def topk_per_window_snapshot(
     """
     from pyspark.sql.window import Window
 
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
+    def rank(batch_df: DataFrame) -> DataFrame:
         w = Window.partitionBy("hour").orderBy(
             F.col("cnt").desc(), F.col("event_type").asc()
         )
-        (
-            batch_df.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= k)
-            .write.mode("overwrite")
-            .parquet(out_dir)
+        return batch_df.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+            F.col("rank") <= k
         )
 
-    # complete-mode snapshot: the skipped empty batch would re-write an
-    # identical snapshot — see start_skipping_empty_batches
-    q = start_skipping_empty_batches(
-        agg_stream.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        agg_stream.sparkSession,
-    )
-    q.awaitTermination()
-    return agg_stream.sparkSession.read.parquet(out_dir)
+    return _drain_to_snapshot(agg_stream, out_dir, rank)
 
 
 def hist_sketch_stream_snapshot(
@@ -406,21 +418,7 @@ def hist_sketch_stream_snapshot(
     from hadoop_gpu_spark.operators.quantiles import hist_counts
 
     agg = hist_counts(stream, col, group_cols, lo, hi, n_buckets, scale)
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    # complete-mode snapshot: the skipped empty batch would re-write an
-    # identical snapshot (state unchanged by no data) — see
-    # start_skipping_empty_batches
-    q = start_skipping_empty_batches(
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        stream.sparkSession,
-    )
-    q.awaitTermination()
-    return stream.sparkSession.read.parquet(out_dir)
+    return _drain_to_snapshot(agg, out_dir)
 
 
 def hll_stream_snapshot(
@@ -458,21 +456,7 @@ def hll_stream_snapshot(
     from hadoop_gpu_spark.operators.hll import hll_registers
 
     agg = hll_registers(stream, col, group_cols, p)
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    # complete-mode snapshot: the skipped empty batch would re-write an
-    # identical snapshot (state unchanged by no data) — see
-    # start_skipping_empty_batches
-    q = start_skipping_empty_batches(
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        stream.sparkSession,
-    )
-    q.awaitTermination()
-    return stream.sparkSession.read.parquet(out_dir)
+    return _drain_to_snapshot(agg, out_dir)
 
 
 def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -534,21 +518,7 @@ def lsh_bucket_stream_snapshot(
         F.min(id_col).alias("canonical_id"),
         F.count(F.lit(1)).cast("long").alias("members"),
     )
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    # complete-mode snapshot: the skipped empty batch would re-write an
-    # identical snapshot (state unchanged by no data) — see
-    # start_skipping_empty_batches
-    q = start_skipping_empty_batches(
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        stream.sparkSession,
-    )
-    q.awaitTermination()
-    return stream.sparkSession.read.parquet(out_dir)
+    return _drain_to_snapshot(agg, out_dir)
 
 
 def _cms_precount(batches):
@@ -614,18 +584,4 @@ def cms_stream_snapshot(
     # partition-local, or per-occurrence.
     pre = toks.mapInPandas(_cms_precount, "tok string, __c long")
     agg = cms_build(pre, "tok", d, w, weight_col="__c")
-
-    def sink(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(out_dir)
-
-    # complete-mode snapshot: the skipped empty batch would re-write an
-    # identical snapshot (state unchanged by no data) — see
-    # start_skipping_empty_batches
-    q = start_skipping_empty_batches(
-        agg.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True),
-        stream.sparkSession,
-    )
-    q.awaitTermination()
-    return stream.sparkSession.read.parquet(out_dir)
+    return _drain_to_snapshot(agg, out_dir)

@@ -67,6 +67,28 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
 _row_group_cache: dict[str, tuple[int, int, int]] = {}
 
 
+def collect_at_most(df: DataFrame, max_rows: int):
+    """``df`` as a ``pyarrow.Table`` if it has at most ``max_rows`` rows,
+    else ``None`` — the one size gate behind every driver-vs-distributed
+    choice (k-means, PQ training, BPE training, connected components).
+
+    One bounded job: ``limit(max_rows + 1)`` stops the scan as soon as the
+    input is known to be too big, and the rows that come back ARE the
+    driver branch's input, so no separate count or sample runs first.
+    The caller replays the identical iterations on the table when it gets
+    one and runs its distributed loop when it gets ``None``; each site
+    keeps its own threshold because each bounds a different replay cost.
+    A negative ``max_rows`` always returns ``None`` (tests force the
+    distributed branch that way).
+
+    Arrow, not pandas: a nullable long column would reach pandas as
+    float64 with NaN, and the driver replays need values exactly as the
+    engine holds them (``to_pylist()`` / ``to_numpy()`` per column).
+    """
+    table = df.limit(max(max_rows + 1, 0)).toArrow()
+    return table if table.num_rows <= max_rows else None
+
+
 def shuffle_width(spark) -> int:
     """The session's configured shuffle width as an int, tolerating
     non-numeric ``spark.sql.shuffle.partitions`` values (some

@@ -91,7 +91,9 @@ def compare_frames(s: pd.DataFrame, o: pd.DataFrame, float_rtol: float = 1e-9) -
     return errs
 
 
-def check_query(spark, name: str, sf_dir: str, float_rtol: float = 1e-9) -> list[str]:
+def check_query(
+    spark, name: str, sf_dir: str, float_rtol: float = 1e-9, nonempty: bool = False
+) -> list[str]:
     from hadoop_gpu_spark.queries import ORACLES, QUERIES
 
     sdf = QUERIES[name](spark, sf_dir)
@@ -99,4 +101,27 @@ def check_query(spark, name: str, sf_dir: str, float_rtol: float = 1e-9) -> list
     con = duckdb_con(sf_dir)
     o = con.sql(ORACLES[name]).df()
     con.close()
-    return compare_frames(s, o, float_rtol)
+    errs = compare_frames(s, o, float_rtol)
+    if nonempty and not errs and s.empty:
+        errs.append("empty result proves nothing")
+    return errs
+
+
+def driver_unsafe_columns(sf_dir: str, names) -> list[str]:
+    """``name.col: TYPE`` for every output column of ``ORACLES[name]``
+    that binds to a type a dtype-strict comparator mis-hashes: DuckDB's
+    SUM(BIGINT) returns HUGEINT, which reaches pandas as float64, so the
+    oracle's "98.0" meets Spark's "98". Binding only, no execution."""
+    from hadoop_gpu_spark.queries import ORACLES
+
+    offenders = []
+    con = duckdb_con(sf_dir)
+    try:
+        for name in names:
+            rel = con.sql(ORACLES[name])
+            for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
+                if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
+                    offenders.append(f"{name}.{col}: {typ}")
+    finally:
+        con.close()
+    return offenders

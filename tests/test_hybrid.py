@@ -8,7 +8,7 @@ import math
 import pandas as pd
 import pytest
 
-from hadoop_gpu_spark.hybrid import AlphaEstimator, HybridOp, makespan_split, run_hybrid
+from hadoop_gpu_spark.hybrid import HybridOp, makespan_split, run_hybrid
 
 
 def _ref_makespan(pending, n_cpu, n_gpu, alpha):
@@ -37,15 +37,6 @@ def test_makespan_cold_start_routes_cpu():
     assert makespan_split(10, 4, 1, 0.0) == (10, 0)
 
 
-def test_alpha_estimator():
-    est = AlphaEstimator()
-    assert est.alpha == 0.0
-    est.record("cpu", 2.0)
-    assert est.alpha == 0.0  # still unmeasured on GPU
-    est.record("gpu", 1.0)
-    assert est.alpha == 2.0
-
-
 def _double_cpu(batches):
     for pdf in batches:
         yield pd.DataFrame({"x": pdf["x"] * 2})
@@ -56,6 +47,23 @@ def _double_gpu(batches):
     # the CPU≡GPU equivalence contract (FIXTURES.md §9).
     for pdf in batches:
         yield pd.DataFrame({"x": (pdf["x"].to_numpy() * 2)})
+
+
+def _record(op, spark, path, seconds):
+    # One measured batch, added on the driver to the same accumulators
+    # the instrumented executor-side legs add to.
+    accs = op._accs(spark.range(1))
+    accs[f"{path}_t"].add(seconds)
+    accs[f"{path}_n"].add(1)
+
+
+def test_alpha_estimator(spark):
+    op = HybridOp("alpha", _double_cpu, "x long", gpu_fn=_double_gpu)
+    assert op.alpha == 0.0
+    _record(op, spark, "cpu", 2.0)
+    assert op.alpha == 0.0  # still unmeasured on GPU
+    _record(op, spark, "gpu", 1.0)
+    assert op.alpha == 2.0
 
 
 def test_hybrid_op_paths_equivalent(spark):
@@ -144,22 +152,22 @@ def test_makespan_scan_subsumes_cpu_gate():
                     assert f(x, pending, n_cpu, n_gpu, alpha) == best, (alpha, n_cpu, n_gpu, pending, x)
 
 
-def test_skewed_batch_times_drive_split():
-    # Feed skewed measured batch times through the estimator and check the
-    # resulting split direction end-to-end (measured alpha -> scan), the
-    # way run_hybrid consumes it.
-    est = AlphaEstimator()
+def test_skewed_batch_times_drive_split(spark):
+    # Feed skewed measured batch times into HybridOp's accumulators and
+    # check the resulting split direction end-to-end (op.alpha -> scan),
+    # the way run_hybrid consumes it.
+    op = HybridOp("skew", _double_cpu, "x long", gpu_fn=_double_gpu)
     for t in (4.0, 4.4, 3.6):   # slow CPU batches
-        est.record("cpu", t)
+        _record(op, spark, "cpu", t)
     for t in (1.0, 1.1, 0.9):   # fast GPU batches
-        est.record("gpu", t)
-    assert abs(est.alpha - 4.0) < 0.01
-    x_skew, y_skew = makespan_split(16, 4, 1, est.alpha)
+        _record(op, spark, "gpu", t)
+    assert abs(op.alpha - 4.0) < 0.01
+    x_skew, y_skew = makespan_split(16, 4, 1, op.alpha)
     # and the mirror skew: GPU slower than CPU -> nearly everything CPU
-    est2 = AlphaEstimator()
-    est2.record("cpu", 1.0)
-    est2.record("gpu", 4.0)
-    x_rev, y_rev = makespan_split(16, 4, 1, est2.alpha)
+    rev = HybridOp("rev", _double_cpu, "x long", gpu_fn=_double_gpu)
+    _record(rev, spark, "cpu", 1.0)
+    _record(rev, spark, "gpu", 4.0)
+    x_rev, y_rev = makespan_split(16, 4, 1, rev.alpha)
     assert y_skew > y_rev, (y_skew, y_rev)
     assert x_rev > x_skew, (x_rev, x_skew)
     # alpha=4, 16 pending, 4 cpu + 1 gpu: reference scan optimum is the

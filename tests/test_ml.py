@@ -94,12 +94,12 @@ def test_kmeans_dataframe_eps_early_stop(spark, monkeypatch):
 
 
 def test_kmeans_driver_path_matches_distributed(spark, monkeypatch):
-    # r16 driver-boundedness contract: on the exact-integer float64
-    # lattice (the q_kmeans gate shape) the driver-side Lloyd loop must
-    # be BIT-identical to the distributed loop — including distance
-    # ties (resolved to the smaller cluster_id by array_min's struct
-    # order) and empty clusters (keep their previous centroid, report
-    # n_points=0). Off-lattice inputs must take the distributed path.
+    # On the exact-integer float64 lattice (the q_kmeans gate shape)
+    # the driver-side Lloyd loop must be BIT-identical to the
+    # distributed loop — including distance ties (resolved to the
+    # smaller cluster_id by array_min's struct order) and empty
+    # clusters (keep their previous centroid, report n_points=0).
+    # Off-lattice inputs must take the distributed path.
     from hadoop_gpu_spark.ml import kmeans as km
 
     rng = np.random.default_rng(11)

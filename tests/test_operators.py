@@ -374,29 +374,32 @@ def test_connected_components_long_chain(spark):
 
 
 def test_connected_components_driver_path_matches_distributed(spark, monkeypatch):
-    # r16 optimization: small edge lists run the label-propagation
-    # rounds driver-side. The two paths must agree exactly — including
-    # the NON-CONVERGED truncation at max_iter (a path longer than
-    # 2^rounds hops keeps partial labels in BOTH paths).
+    # Small edge lists run the label-propagation rounds driver-side.
+    # The two paths must agree exactly — including the NON-CONVERGED
+    # truncation at max_iter (a path longer than 2^rounds hops keeps
+    # partial labels in BOTH paths) and null endpoints (a null joins
+    # nothing, so a null node keeps a null label).
     from hadoop_gpu_spark.dedup import components as comp_mod
+
+    def components(pairs, mi):
+        out = comp_mod.connected_components(pairs, max_iter=mi).collect()
+        return sorted((tuple(r) for r in out), key=repr)
 
     cases = [
         ([(2, 1), (2, 3), (10, 11)], 20),      # transitive groups
         ([(i, i + 1) for i in range(40)], 20),  # long path, converges
         ([(i, i + 1) for i in range(40)], 2),   # truncated at max_iter
         ([("b", "a"), ("b", "c"), ("x", "y")], 20),  # string node ids
+        ([(None, 5), (1, 2), (2, 3)], 20),     # null endpoint
     ]
     for rows, mi in cases:
         pairs = spark.createDataFrame(rows, ["a", "b"])
-        fast = sorted(
-            tuple(r) for r in comp_mod.connected_components(pairs, max_iter=mi).collect()
-        )
+        fast = components(pairs, mi)
         monkeypatch.setattr(comp_mod, "DRIVER_CC_MAX_EDGES", -1)
-        slow = sorted(
-            tuple(r) for r in comp_mod.connected_components(pairs, max_iter=mi).collect()
-        )
+        slow = components(pairs, mi)
         monkeypatch.undo()
         assert fast == slow, (rows[:3], mi)
+    assert fast == sorted([(1, 1), (2, 1), (3, 1), (5, 5), (None, None)], key=repr)
 
 
 def test_parse_field_spec():

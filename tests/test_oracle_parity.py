@@ -9,7 +9,7 @@ import pytest
 
 from hadoop_gpu_spark.queries import ORACLES, QUERIES
 
-from .oracle import check_query
+from .oracle import check_query, driver_unsafe_columns
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
@@ -46,7 +46,7 @@ def test_oracle_parity_sf01_full(spark, name):
     assert not errs, f"{name}: " + "; ".join(errs)
 
 
-def test_no_oracle_emits_driver_unsafe_types():
+def test_no_oracle_emits_driver_unsafe_types(sf_dir):
     # Root cause of the two-round q_sequence_pack driver red (found r05):
     # DuckDB's SUM(BIGINT) returns HUGEINT, and a HUGEINT output column
     # reaches pandas as float64 — a dtype-strict comparator then hashes
@@ -55,20 +55,5 @@ def test_no_oracle_emits_driver_unsafe_types():
     # values match. Guard: every oracle's OUTPUT columns must bind to
     # driver-safe types (no HUGEINT/UHUGEINT/UBIGINT). Binding only — no
     # execution — so this covers all oracles in milliseconds.
-    import duckdb
-
-    from hadoop_gpu_spark.queries import ORACLES
-    from hadoop_gpu_spark.tables import TABLE_NAMES
-
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('/root/testdata/sf0.001/{t}.parquet')"
-        )
-    offenders = []
-    for name, sql in ORACLES.items():
-        rel = con.sql(sql)
-        for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
-            if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
-                offenders.append((name, col, typ))
+    offenders = driver_unsafe_columns(sf_dir, sorted(ORACLES))
     assert not offenders, offenders

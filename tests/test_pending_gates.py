@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 PENDING = [
     "q_pii_redact",
@@ -37,32 +37,13 @@ PENDING_R07 = [
 
 @pytest.mark.parametrize("name", [*PENDING, *PENDING_R07])
 def test_pending_gate_oracle(spark, sf_dir, name):
-    from hadoop_gpu_spark import queries as q
-
-    fn = getattr(q, name)
-    oracle = getattr(q, f"Q_{name[2:].upper()}_ORACLE")
-    got = fn(spark, sf_dir).toPandas()
-    con = duckdb_con(sf_dir)
-    want = con.sql(oracle).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, name, sf_dir)
     assert not errs, f"{name}: " + "; ".join(errs[:3])
 
 
 def test_pending_oracles_emit_driver_safe_types(sf_dir):
-    # Same binding-level guard the registered oracles get
-    # (test_oracle_parity.py::test_no_oracle_emits_driver_unsafe_types):
-    # pending gates must not ship a HUGEINT-shaped driver red in r06.
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    offenders = []
-    for name in [*PENDING, *PENDING_R07, "q_media_probe", "q_audio_decode"]:
-        rel = con.sql(getattr(q, f"Q_{name[2:].upper()}_ORACLE"))
-        for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
-            if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
+    names = [*PENDING, *PENDING_R07, "q_media_probe", "q_audio_decode"]
+    offenders = driver_unsafe_columns(sf_dir, names)
     assert not offenders, offenders
 
 
@@ -515,13 +496,7 @@ def test_embedding_outliers_zero_variance_degenerates_to_zero(spark):
 # r08 pending gate: q_funnel (operators/funnel.py).
 # ---------------------------------------------------------------------------
 def test_funnel_gate_oracle(spark, sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    got = q.q_funnel(spark, sf_dir).toPandas()
-    con = duckdb_con(sf_dir)
-    want = con.sql(q.Q_FUNNEL_ORACLE).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, "q_funnel", sf_dir)
     assert not errs, "; ".join(errs[:3])
 
 
@@ -728,15 +703,8 @@ def test_funnel_skew_pathological_entity(spark):
 # r08 pending gate: q_pq_train (integer-lattice k-means codebook training).
 # ---------------------------------------------------------------------------
 def test_pq_train_gate_oracle(spark, sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    got = q.q_pq_train(spark, sf_dir).toPandas()
-    con = duckdb_con(sf_dir)
-    want = con.sql(q.Q_PQ_TRAIN_ORACLE).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, "q_pq_train", sf_dir)
     assert not errs, "; ".join(errs[:3])
-    assert len(got) == 128  # 8 subspaces x 16 centroids
 
 
 def test_pq_train_actually_trains(spark, sf_dir):
@@ -750,6 +718,7 @@ def test_pq_train_actually_trains(spark, sf_dir):
 
     emb = load_table(spark, "embeddings", sf_dir)
     trained = pq_train(emb).toPandas().sort_values(["sub", "cluster_id"])
+    assert len(trained) == 128  # 8 subspaces x 16 centroids
     init_only = pq_train(emb, iters=0).toPandas().sort_values(["sub", "cluster_id"])
     d_cols = [f"c{d}" for d in range(8)]
     assert not trained[d_cols].equals(init_only[d_cols])

@@ -245,6 +245,24 @@ def test_strip_file_scheme():
     assert _strip_file_scheme("s3://bkt/a.parquet") == "s3://bkt/a.parquet"
 
 
+def test_collect_at_most_boundary(spark):
+    # The one driver-vs-distributed size gate: a table at exactly
+    # max_rows, None one row past it, None for a negative limit (how
+    # tests force the distributed branch), an empty table for an empty
+    # frame — and values cross exactly (a nullable long stays int/None).
+    from hadoop_gpu_spark.utils import collect_at_most
+
+    df = spark.createDataFrame([(i if i % 3 else None,) for i in range(5)], "v long")
+    t = collect_at_most(df, 5)
+    assert t.num_rows == 5
+    assert sorted(t.column("v").to_pylist(), key=repr) == [1, 2, 4, None, None]
+    assert collect_at_most(df, 4) is None
+    assert collect_at_most(df, -1) is None
+    empty = collect_at_most(df.limit(0), 0)
+    assert empty is not None and empty.num_rows == 0
+    assert empty.schema.names == ["v"]
+
+
 def test_pipe_pipeline_has_no_rdd_boundary(spark, sf_dir):
     # The Streaming line-protocol legs (pipe_map/pipe_reduce) must stay
     # inside ONE DataFrame plan. The old rdd.pipe form compiled to a

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 CANDIDATES = [
     "q_quantile_sketch",
@@ -68,31 +68,12 @@ def test_readme_counts_match_registry():
 
 @pytest.mark.parametrize("name", CANDIDATES)
 def test_candidate_gate_oracle(spark, sf_dir, name):
-    from hadoop_gpu_spark import queries as q
-
-    fn = getattr(q, name)
-    oracle = getattr(q, f"Q_{name[2:].upper()}_ORACLE")
-    got = fn(spark, sf_dir).toPandas()
-    con = duckdb_con(sf_dir)
-    want = con.sql(oracle).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, name, sf_dir)
     assert not errs, f"{name}: " + "; ".join(errs[:3])
 
 
 def test_candidate_oracles_emit_driver_safe_types(sf_dir):
-    # Same binding-level guard every registered oracle gets: no
-    # HUGEINT-shaped driver red waiting in the staged cohort.
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    offenders = []
-    for name in CANDIDATES:
-        rel = con.sql(getattr(q, f"Q_{name[2:].upper()}_ORACLE"))
-        for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
-            if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, CANDIDATES)
     assert not offenders, offenders
 
 

@@ -18,37 +18,19 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 R11_CANDIDATES = ["q_bm25_topk", "q_semantic_dedup", "q_bpe_merges", "q_cms_token_freq"]
 
 
 @pytest.mark.parametrize("name", R11_CANDIDATES)
 def test_r11_candidate_gate_oracle(spark, sf_dir, name):
-    from hadoop_gpu_spark import queries as q
-
-    fn = getattr(q, name)
-    oracle = getattr(q, f"Q_{name[2:].upper()}_ORACLE")
-    got = fn(spark, sf_dir).toPandas()
-    con = duckdb_con(sf_dir)
-    want = con.sql(oracle).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, name, sf_dir, nonempty=True)
     assert not errs, f"{name}: " + "; ".join(errs[:3])
-    assert len(got) > 0, f"{name}: empty gate proves nothing"
 
 
 def test_r11_candidate_oracles_emit_driver_safe_types(sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    offenders = []
-    for name in R11_CANDIDATES:
-        rel = con.sql(getattr(q, f"Q_{name[2:].upper()}_ORACLE"))
-        for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
-            if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, R11_CANDIDATES)
     assert not offenders, offenders
 
 

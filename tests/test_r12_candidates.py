@@ -20,7 +20,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 R12_CANDIDATES = [
     "q_hll_distinct",
@@ -35,30 +35,12 @@ _HLL_M = 1 << _HLL_P
 
 @pytest.mark.parametrize("name", R12_CANDIDATES)
 def test_r12_candidate_gate_oracle(spark, sf_dir, name):
-    from hadoop_gpu_spark import queries as q
-
-    fn = getattr(q, name)
-    oracle = getattr(q, f"Q_{name[2:].upper()}_ORACLE")
-    got = fn(spark, sf_dir).toPandas()
-    con = duckdb_con(sf_dir)
-    want = con.sql(oracle).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, name, sf_dir, nonempty=True)
     assert not errs, f"{name}: " + "; ".join(errs[:3])
-    assert len(got) > 0, f"{name}: empty gate proves nothing"
 
 
 def test_r12_candidate_oracles_emit_driver_safe_types(sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    offenders = []
-    for name in R12_CANDIDATES:
-        rel = con.sql(getattr(q, f"Q_{name[2:].upper()}_ORACLE"))
-        for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
-            if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, R12_CANDIDATES)
     assert not offenders, offenders
 
 

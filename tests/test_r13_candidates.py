@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 R13_CANDIDATES = ["q_interval_overlap"]
 
@@ -20,30 +20,12 @@ _BOTH_SCALES = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 @pytest.mark.parametrize("name", R13_CANDIDATES)
 @pytest.mark.parametrize("scale_dir", _BOTH_SCALES)
 def test_r13_candidate_gate_oracle(spark, name, scale_dir):
-    from hadoop_gpu_spark import queries as q
-
-    fn = getattr(q, name)
-    oracle = getattr(q, f"Q_{name[2:].upper()}_ORACLE")
-    got = fn(spark, scale_dir).toPandas()
-    con = duckdb_con(scale_dir)
-    want = con.sql(oracle).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, name, scale_dir, nonempty=True)
     assert not errs, f"{name}@{scale_dir}: " + "; ".join(errs[:3])
-    assert len(got) > 0, f"{name}@{scale_dir}: empty gate proves nothing"
 
 
 def test_r13_candidate_oracles_emit_driver_safe_types(sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    offenders = []
-    for name in R13_CANDIDATES:
-        rel = con.sql(getattr(q, f"Q_{name[2:].upper()}_ORACLE"))
-        for col, typ in zip(rel.columns, [str(t) for t in rel.types]):
-            if typ in ("HUGEINT", "UHUGEINT", "UBIGINT"):
-                offenders.append(f"{name}.{col}: {typ}")
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, R13_CANDIDATES)
     assert not offenders, offenders
 
 

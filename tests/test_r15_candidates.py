@@ -24,35 +24,19 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 _BOTH_SCALES = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 
 
 @pytest.mark.parametrize("scale_dir", _BOTH_SCALES)
 def test_ivfpq_gate_oracle(spark, scale_dir):
-    from hadoop_gpu_spark import queries as q
-
-    got = q.q_ann_ivfpq(spark, scale_dir).toPandas()
-    con = duckdb_con(scale_dir)
-    want = con.sql(q.Q_ANN_IVFPQ_ORACLE).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, "q_ann_ivfpq", scale_dir, nonempty=True)
     assert not errs, f"q_ann_ivfpq@{scale_dir}: " + "; ".join(errs[:3])
-    assert len(got) > 0
 
 
 def test_ivfpq_oracle_emits_driver_safe_types(sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    rel = con.sql(q.Q_ANN_IVFPQ_ORACLE)
-    offenders = [
-        f"{c}: {t}"
-        for c, t in zip(rel.columns, [str(t) for t in rel.types])
-        if str(t) in ("HUGEINT", "UHUGEINT", "UBIGINT")
-    ]
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, ["q_ann_ivfpq"])
     assert not offenders, offenders
 
 
@@ -249,28 +233,12 @@ def test_ivfpq_plan_corpus_never_shuffles_before_probe_join(spark, sf_dir):
 
 @pytest.mark.parametrize("scale_dir", _BOTH_SCALES)
 def test_rerank_gate_oracle(spark, scale_dir):
-    from hadoop_gpu_spark import queries as q
-
-    got = q.q_rerank_tfidf(spark, scale_dir).toPandas()
-    con = duckdb_con(scale_dir)
-    want = con.sql(q.Q_RERANK_TFIDF_ORACLE).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, "q_rerank_tfidf", scale_dir, nonempty=True)
     assert not errs, f"q_rerank_tfidf@{scale_dir}: " + "; ".join(errs[:3])
-    assert len(got) > 0
 
 
 def test_rerank_oracle_emits_driver_safe_types(sf_dir):
-    from hadoop_gpu_spark import queries as q
-
-    con = duckdb_con(sf_dir)
-    rel = con.sql(q.Q_RERANK_TFIDF_ORACLE)
-    offenders = [
-        f"{c}: {t}"
-        for c, t in zip(rel.columns, [str(t) for t in rel.types])
-        if str(t) in ("HUGEINT", "UHUGEINT", "UBIGINT")
-    ]
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, ["q_rerank_tfidf"])
     assert not offenders, offenders
 
 

@@ -33,46 +33,22 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.oracle import compare_frames, duckdb_con
+from tests.oracle import check_query, driver_unsafe_columns
 
 _BOTH_SCALES = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 _GATES = ["q_morelikethis", "q_hybrid_rrf", "q_ann_ivfpq_residual"]
 
 
-def _oracle_for(name: str) -> str:
-    from hadoop_gpu_spark import queries as q
-
-    return {
-        "q_morelikethis": q.Q_MORELIKETHIS_ORACLE,
-        "q_hybrid_rrf": q.Q_HYBRID_RRF_ORACLE,
-        "q_ann_ivfpq_residual": q.Q_ANN_IVFPQ_RESIDUAL_ORACLE,
-    }[name]
-
-
 @pytest.mark.parametrize("scale_dir", _BOTH_SCALES)
 @pytest.mark.parametrize("gate", _GATES)
 def test_r16_gate_oracle(spark, gate, scale_dir):
-    from hadoop_gpu_spark import queries as q
-
-    got = getattr(q, gate)(spark, scale_dir).toPandas()
-    con = duckdb_con(scale_dir)
-    want = con.sql(_oracle_for(gate)).df()
-    con.close()
-    errs = compare_frames(got, want)
+    errs = check_query(spark, gate, scale_dir, nonempty=True)
     assert not errs, f"{gate}@{scale_dir}: " + "; ".join(errs[:3])
-    assert len(got) > 0
 
 
 @pytest.mark.parametrize("gate", _GATES)
 def test_r16_oracles_emit_driver_safe_types(sf_dir, gate):
-    con = duckdb_con(sf_dir)
-    rel = con.sql(_oracle_for(gate))
-    offenders = [
-        f"{c}: {t}"
-        for c, t in zip(rel.columns, [str(t) for t in rel.types])
-        if str(t) in ("HUGEINT", "UHUGEINT", "UBIGINT")
-    ]
-    con.close()
+    offenders = driver_unsafe_columns(sf_dir, [gate])
     assert not offenders, offenders
 
 
