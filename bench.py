@@ -136,35 +136,41 @@ def _machine_calib() -> dict:
     }
 
 
-def _load_per_cpu() -> float:
-    # Load guard (VERDICT r05 #2: the official r05 record ran under
-    # machine contention and became a misleading comparison base). The
-    # 1-min load average per core; if the machine is already busy the
-    # record is stamped contended=true so readers know the minima are
-    # environment-limited, not code-limited.
+def _cpu_times() -> tuple[int, int]:
+    """(idle, total) jiffies over all CPUs, from the first line of /proc/stat
+    (user nice system idle iowait irq softirq steal; guest time is already
+    in user). Idle counts iowait; steal counts as busy."""
+    with open("/proc/stat") as f:
+        ticks = [int(x) for x in f.readline().split()[1:9]]
+    return ticks[3] + ticks[4], sum(ticks)
+
+
+def _load_per_cpu(interval_s: float = 1.0) -> float:
+    """Busy fraction of the machine's CPUs over the next ``interval_s``:
+    two /proc/stat samples. A run started on a busy machine is stamped
+    contended=true so readers know its minima are environment-limited,
+    not code-limited. (The 1-minute load average this replaced decays too
+    slowly for the bounded start wait below.)"""
     try:
-        load1 = os.getloadavg()[0]
-    except OSError:  # pragma: no cover - getloadavg absent on some OSes
-        load1 = 0.0
-    return round(load1 / (os.cpu_count() or 1), 3)
+        idle0, total0 = _cpu_times()
+        time.sleep(interval_s)
+        idle1, total1 = _cpu_times()
+    except (OSError, ValueError):  # pragma: no cover - no /proc/stat
+        return 0.0
+    ticks = total1 - total0
+    return round(1.0 - (idle1 - idle0) / ticks, 3) if ticks > 0 else 0.0
 
 
 def _wait_for_quiet_start(max_wait_s: float, gate: float = 0.10) -> float:
-    """Load-gate an attempt's START (r17 hardening, VERDICT r16 item 2:
-    the official r16 record was a SINGLE attempt started at load_per_cpu
-    0.205 — under the 0.25 contended threshold, so it was never retried,
-    and the round-over-round comparison was decided by ambient VM load).
-    Poll the 1-min load average and only begin measuring once it is
-    below ``gate`` per core, waiting at most ``max_wait_s`` (bounded —
-    the bench must terminate on a genuinely busy host; a still-loaded
-    start is then stamped in the record rather than hidden). Returns the
-    seconds actually waited."""
-    waited = 0.0
-    step = 10.0
-    while _load_per_cpu() > gate and waited < max_wait_s:
-        time.sleep(step)
-        waited += step
-    return round(waited, 1)
+    """Load-gate an attempt's START: begin measuring only once the CPUs are
+    busy less than ``gate`` of the time, waiting at most ``max_wait_s``
+    (bounded: the bench must terminate on a genuinely busy host; a
+    still-loaded start is then stamped in the record rather than hidden).
+    Returns the seconds waited, the 1 s samples included."""
+    t0 = time.monotonic()
+    while _load_per_cpu() > gate and time.monotonic() - t0 < max_wait_s:
+        time.sleep(1.0)
+    return round(time.monotonic() - t0, 1)
 
 
 def _attempt(spark, sf_dir: str, warm_cycles: int) -> dict:
@@ -253,9 +259,9 @@ def main() -> None:
     # Attempt protocol (r17 hardening, VERDICT r16 item 2 — additions
     # only; the one-line JSON contract and the $SPARK_GRAFT_CPUS /
     # $SPARK_GRAFT_SF_DIR contract are unchanged):
-    # 1. every attempt's START is load-gated (bounded wait for the 1-min
-    #    load to drop below 0.10/core — the r16 record began at 0.205
-    #    and was decided by it);
+    # 1. every attempt's START is load-gated (bounded wait for the CPUs
+    #    to be less than 10% busy — the r16 record began under load and
+    #    was decided by it);
     # 2. at least TWO attempts ALWAYS run (r15 got a contended attempt
     #    discarded by the retry; r16's single uncontended-looking
     #    attempt got no such protection), best = (uncontended, fastest);

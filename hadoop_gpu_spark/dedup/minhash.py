@@ -127,9 +127,12 @@ def minhash_signatures_pandas(
         views: list[np.ndarray] = []
         counts = np.zeros(n_rows, dtype=np.int64)
         short: dict[int, int] = {}
+        nulls: list[int] = []
         for i, t in enumerate(texts):
-            t = t if t is not None else ""
-            if len(t) >= k:
+            if t is None:
+                # the expression twin's shingle of NULL is NULL: all-NULL minima
+                nulls.append(i)
+            elif len(t) >= k:
                 cp = np.frombuffer(t.encode("utf-32-le"), dtype=np.uint32)
                 v = np.lib.stride_tricks.sliding_window_view(cp, k)
                 views.append(v)
@@ -150,7 +153,9 @@ def minhash_signatures_pandas(
                 sigs[nz, j] = np.minimum.reduceat(v, starts)
         for i, hs in short.items():
             sigs[i] = (A * hs + B) % P
-        return pd.Series(list(sigs))
+        out = pd.Series(list(sigs), dtype=object)
+        out.iloc[nulls] = None
+        return out
 
     sig = ensure_min_partitions(df).select(
         F.col(id_col), _udf(F.col(text_col)).alias("__s")

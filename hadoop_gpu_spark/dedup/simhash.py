@@ -131,8 +131,11 @@ def simhash64_pandas(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     def _udf(texts: pd.Series) -> pd.Series:
         h60 = _hash_token60
         out = np.empty(len(texts), dtype=np.int64)
+        null = texts.isna().to_numpy()
         for i, t in enumerate(texts):
-            toks = [x for x in java_ws.split(t if t is not None else "") if x]
+            if null[i]:
+                continue
+            toks = [x for x in java_ws.split(t) if x]
             n = len(toks)
             if n == 0:
                 out[i] = 0
@@ -140,7 +143,8 @@ def simhash64_pandas(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             h = np.fromiter((h60(x) for x in toks), dtype=np.int64, count=n)
             ones = ((h[:, None] >> shifts) & 1).sum(axis=0)
             out[i] = masks[2 * ones > n].sum()
-        return pd.Series(out)
+        # NULL text has a NULL fingerprint, as in the expression twin
+        return pd.Series(pd.arrays.IntegerArray(out, null))
 
     df = ensure_min_partitions(df)
     return df.select(F.col(id_col), _udf(F.col(text_col)).alias("simhash"))

@@ -87,7 +87,8 @@ def winnow_fingerprints_pandas(
 
     @pandas_udf(ArrayType(LongType()))
     def _udf(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: _winnow_one(t if t is not None else "", k, w))
+        # NULL text: the expression twin's one NULL shingle hash, [NULL]
+        return texts.map(lambda t: [None] if t is None else _winnow_one(t, k, w))
 
     c = F.col(text) if isinstance(text, str) else text
     return _udf(c)

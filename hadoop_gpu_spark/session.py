@@ -22,6 +22,11 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = str(os.cpu_count() or 1)
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
+# The directory holding the ``hadoop_gpu_spark`` package: Python workers
+# import the engine (the worker daemon, pickled UDF references) from here,
+# whatever directory the driver runs in.
+ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -62,7 +67,16 @@ def get_spark(
         # reader rejects; read as long nanos and convert in tables.load_table.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        # Workers fork from pyspark's daemon behind a zipimport fix that
+        # stops every task re-reading pyspark.zip (see pyspark_daemon.py).
+        .config("spark.python.daemon.module", "hadoop_gpu_spark.pyspark_daemon")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Append the engine to a caller's worker PYTHONPATH, never replace it.
+    paths = [p for p in conf.get(PYTHONPATH_CONF, "").split(os.pathsep) if p]
+    if ENGINE_PARENT not in paths:
+        paths.append(ENGINE_PARENT)
+    conf[PYTHONPATH_CONF] = os.pathsep.join(paths)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

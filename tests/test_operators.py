@@ -497,18 +497,20 @@ def test_minhash_pandas_matches_expression(spark, sf_dir):
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     edge = spark.createDataFrame(
-        [(200001, ""), (200002, "ab"), (200003, "abcde"), (200004, "héllo wörld")],
-        ["doc_id", "text"],
+        [(200001, ""), (200002, "ab"), (200003, "abcde"), (200004, "héllo wörld"), (200005, None)],
+        "doc_id long, text string",
     )
     both = docs.union(edge)
     e = minhash_signatures(both, "text", "doc_id")
     p = minhash_signatures_pandas(both, "text", "doc_id")
     joined = e.alias("e").join(p.alias("p"), on="doc_id")
+    # null-safe: NULL text has an all-NULL signature in both paths
     mismatch = joined.filter(
-        " OR ".join(f"e.m{j} != p.m{j}" for j in range(NUM_HASHES))
+        " OR ".join(f"NOT (e.m{j} <=> p.m{j})" for j in range(NUM_HASHES))
     )
     assert mismatch.count() == 0, mismatch.limit(3).collect()
     assert joined.count() > 500
+    assert joined.filter("doc_id = 200005 AND e.m0 IS NULL").count() == 1
 
 
 def test_simhash_pandas_matches_expression(spark, sf_dir):
@@ -529,23 +531,28 @@ def test_simhash_pandas_matches_expression(spark, sf_dir):
             (300004, "a\u00a0b c"),  # NBSP joins tokens: Java \s+ will not split it
             (300005, "x\ty\nz\x0b\x0c\rw"),
             (300006, "héllo wörld"),
+            (300007, None),
         ],
-        ["doc_id", "text"],
+        "doc_id long, text string",
     )
     both = docs.union(edge)
     e = simhash64(both, "text", "doc_id").withColumnRenamed("simhash", "e")
     p = simhash64_pandas(both, "text", "doc_id").withColumnRenamed("simhash", "p")
     joined = e.join(p, "doc_id")
-    bad = joined.filter(F.col("e") != F.col("p"))
+    # null-safe: NULL text has a NULL fingerprint in both paths
+    bad = joined.filter(~F.col("e").eqNullSafe(F.col("p")))
     assert bad.count() == 0, bad.limit(5).collect()
     assert joined.count() > 500
+    assert joined.filter("doc_id = 300007 AND e IS NULL").count() == 1
 
 
 def test_vectorized_kernels_random_parity(spark):
     """One randomized sweep over all four Arrow-batched fast paths: on a
     batch of adversarial random strings (unicode, exotic whitespace,
-    repeats) every numpy twin must equal its expression twin bit-for-bit.
-    Complements the corpus parity tests with tokenizer/boundary fuzz."""
+    repeats, NULLs) every numpy twin must equal its expression twin
+    bit-for-bit, also over a few rows spread across 16 partitions, so
+    zero-row Arrow batches cross the worker. Complements the corpus
+    parity tests with tokenizer/boundary fuzz."""
     import random
 
     from pyspark.sql import functions as F
@@ -564,28 +571,33 @@ def test_vectorized_kernels_random_parity(spark):
     docs = [
         (i, "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 40))))
         for i in range(200)
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"]).coalesce(2)
+    ] + [(200, None), (201, None)]
+    schema = "doc_id long, text string"
+    sparse = [(1, None), (2, "a b c d e f"), (3, None), (4, ""), (5, "x y z w v u t s")]
+    for df in (
+        spark.createDataFrame(docs, schema).coalesce(2),
+        spark.createDataFrame(sparse, schema).repartition(16),
+    ):
+        w = df.select(
+            "doc_id",
+            F.array_sort(winnow_fingerprints_expr("text")).alias("e"),
+            F.array_sort(winnow_fingerprints_pandas("text")).alias("p"),
+        )
+        assert w.filter(~F.col("e").eqNullSafe(F.col("p"))).count() == 0
 
-    w = df.select(
-        "doc_id",
-        F.array_sort(winnow_fingerprints_expr("text")).alias("e"),
-        F.array_sort(winnow_fingerprints_pandas("text")).alias("p"),
-    )
-    assert w.filter(F.col("e") != F.col("p")).count() == 0
+        s = (
+            simhash64(df, "text", "doc_id").withColumnRenamed("simhash", "e")
+            .join(simhash64_pandas(df, "text", "doc_id").withColumnRenamed("simhash", "p"), "doc_id")
+        )
+        assert s.filter(~F.col("e").eqNullSafe(F.col("p"))).count() == 0
 
-    s = (
-        simhash64(df, "text", "doc_id").withColumnRenamed("simhash", "e")
-        .join(simhash64_pandas(df, "text", "doc_id").withColumnRenamed("simhash", "p"), "doc_id")
-    )
-    assert s.filter(F.col("e") != F.col("p")).count() == 0
-
-    e = minhash_signatures(df, "text", "doc_id")
-    p = minhash_signatures_pandas(df, "text", "doc_id")
-    p = p.select("doc_id", *[F.col(f"m{j}").alias(f"p{j}") for j in range(NUM_HASHES)])
-    j = e.join(p, "doc_id")
-    bad = j.filter(" OR ".join(f"m{k} != p{k}" for k in range(NUM_HASHES)))
-    assert bad.count() == 0
+        e = minhash_signatures(df, "text", "doc_id")
+        p = minhash_signatures_pandas(df, "text", "doc_id")
+        p = p.select("doc_id", *[F.col(f"m{j}").alias(f"p{j}") for j in range(NUM_HASHES)])
+        j = e.join(p, "doc_id")
+        bad = j.filter(" OR ".join(f"NOT (m{k} <=> p{k})" for k in range(NUM_HASHES)))
+        assert bad.count() == 0
+        assert j.count() == df.count()
 
     # LSH signatures on random float vectors (including negatives/zeros)
     from hadoop_gpu_spark.similarity.ann import (

@@ -31,8 +31,11 @@ def test_windowed_counts_matches_batch(spark, sf_dir):
 
 
 def test_sessionize_stateful_runs(spark, sf_dir):
+    # NoTimeout: with the processing-time timeout an availableNow drain
+    # never terminates (see sessionize_stateful); the timeout path is
+    # test_sessionize_processing_time_timeout_flushes.
     stream = events_stream(spark, sf_dir)
-    sess = sessionize_stateful(stream, gap_minutes=30)
+    sess = sessionize_stateful(stream, gap_minutes=30, use_timeout=False)
     q = (
         sess.writeStream.format("memory")
         .queryName("sess_stream")
@@ -40,7 +43,10 @@ def test_sessionize_stateful_runs(spark, sf_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120) is True
+    finally:
+        q.stop()
     out = spark.table("sess_stream").toPandas()
     # availableNow drains one batch; only sessions closed by a >gap jump
     # inside the batch are emitted — check shape + invariants, not totals.
