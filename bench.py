@@ -14,10 +14,8 @@ import re
 import sys
 import time
 
-from hadoop_gpu_spark import get_spark
-from hadoop_gpu_spark.operators.bloom import release_bloom_broadcasts
+from hadoop_gpu_spark import get_spark, release
 from hadoop_gpu_spark.queries import QUERIES
-from hadoop_gpu_spark.utils import release_persisted_frames
 
 # Bench record notes — cross-round comparison base:
 # - The official BENCH_r05 record (same-7 total 7.17s) ran CONTENDED: its
@@ -210,16 +208,11 @@ def _attempt(spark, sf_dir: str, warm_cycles: int) -> dict:
             continue
         passes = []
         for _ in range(3):
-            # Cache-contamination guard (r08 ADVICE): eager_persist
-            # materializes at CONSTRUCTION and Spark's CacheManager
-            # dedupes by plan, so without a release each timed pass of a
-            # persisting query would measure an InMemoryTableScan read
-            # populated during the warm cycles instead of the query. No
-            # HEADLINE query persists today (these are no-ops, ~free),
-            # but the guard makes the invariant structural: a timed pass
-            # always pays the query's full construction cost.
-            release_persisted_frames()
-            release_bloom_broadcasts()
+            # eager_persist materializes at construction and Spark's
+            # CacheManager dedupes by plan, so without a release a timed
+            # pass of a persisting query would read a cache the warm
+            # cycles filled: every timed pass pays full construction.
+            release(spark)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             passes.append(time.perf_counter() - t0)
@@ -306,12 +299,8 @@ def main() -> None:
     record["attempt_loads"] = [a["load_per_cpu_start"] for a in attempts]
     record["load_gate_waits_s"] = gate_waits
 
-    # Executable lifetime contracts (VERDICT r07 #7): the bloom-bitset
-    # broadcast cache and the eager_persist cache registry both claim
-    # "released at teardown" — run the release paths here so the claim
-    # executes on every bench run, not just in docstrings.
-    release_bloom_broadcasts()
-    release_persisted_frames()
+    # Free the cached frames and bitset broadcasts the run created.
+    release(spark)
     print(json.dumps(record))
 
 

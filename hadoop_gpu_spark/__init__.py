@@ -15,8 +15,8 @@ Design stance (SURVEY.md §7):
   path always correct and the GPU path optional.
 """
 
-from hadoop_gpu_spark.session import get_spark
+from hadoop_gpu_spark.session import get_spark, release
 from hadoop_gpu_spark.tables import load_tables, TABLE_NAMES
 
-__all__ = ["get_spark", "load_tables", "TABLE_NAMES"]
+__all__ = ["get_spark", "release", "load_tables", "TABLE_NAMES"]
 __version__ = "0.1.0"

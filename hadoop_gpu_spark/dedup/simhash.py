@@ -150,21 +150,6 @@ def simhash64_pandas(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return df.select(F.col(id_col), _udf(F.col(text_col)).alias("simhash"))
 
 
-def simhash_chunks(sig_df: DataFrame, id_col: str) -> DataFrame:
-    """(id, chunk, chunk_val) — 4 rows per doc for candidate bucketing.
-
-    One explode of an inline array (the union-of-projections form would
-    re-evaluate the whole simhash computation once per chunk — see
-    minhash.band_hashes)."""
-    entries = []
-    for c in range(CHUNKS):
-        val = F.shiftright(F.col("simhash"), c * CHUNK_BITS).bitwiseAND(F.lit((1 << CHUNK_BITS) - 1))
-        entries.append(F.struct(F.lit(c).alias("chunk"), val.alias("chunk_val")))
-    return sig_df.select(F.col(id_col), F.explode(F.array(*entries)).alias("__e")).select(
-        id_col, F.col("__e.chunk").alias("chunk"), F.col("__e.chunk_val").alias("chunk_val")
-    )
-
-
 def simhash_near_dups(
     df: DataFrame, text_col: str, id_col: str, max_hamming: int = 3, max_bucket: int = 256
 ) -> DataFrame:

@@ -21,9 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# 2^32 and 2^31 as floats for normalizing hashes into [0, 1).
-U32 = float(1 << 32)
-
 
 def _as_string(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -53,15 +50,6 @@ def hash_u32_sql(expr: str, seed: int = 0) -> str:
     if seed:
         s = f"({s} || ':{seed}')"
     return f"('0x' || substr(md5({s}), 1, 8))::BIGINT"
-
-
-def hash_unit(col: Column | str, seed: int = 0) -> Column:
-    """Deterministic pseudo-uniform double in [0, 1)."""
-    return hash_u32(col, seed) / F.lit(U32)
-
-
-def hash_unit_sql(expr: str, seed: int = 0) -> str:
-    return f"({hash_u32_sql(expr, seed)} / 4294967296.0)"
 
 
 def bucket(col: Column | str, n: int, seed: int = 0) -> Column:

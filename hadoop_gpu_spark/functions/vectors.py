@@ -33,10 +33,3 @@ def euclidean_sq(a: Column | str, b: Column | str) -> Column:
         _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))
     )
     return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(a: Column | str) -> Column:
-    """sqrt of the left-fold sum of squares in double — the same fold
-    order DuckDB's list_sum(list_transform(...)) uses, so norms agree
-    bit-for-bit between engines (oracle parity)."""
-    return F.sqrt(norm_sq(a))

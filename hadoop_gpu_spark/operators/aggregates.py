@@ -10,8 +10,7 @@ that wires many aggregates into one pass.
 
 Spark restatement: one ``groupBy(...).agg(...)`` — Catalyst plans a
 partial/final HashAggregate, which IS the reference's combiner pattern,
-automatically. The descriptor API maps descriptor strings to Column aggs so
-a whole descriptor job stays a single shuffle.
+automatically, and a whole descriptor job stays a single shuffle.
 
 Exactness note: double sums are not associative; where an oracle needs
 bit-stable results over money columns use :func:`exact_money_sum` (decimal
@@ -33,41 +32,6 @@ def exact_money_sum(col: Column | str, alias: str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast("decimal(18,2)")).cast("double").alias(alias)
-
-
-# --- descriptor-driven aggregation ------------------------------------------
-# Reference descriptor strings look like "LongValueSum:..." and are generated
-# per record by a user plugin (ValueAggregatorBaseDescriptor.java:32-46).
-# Here a descriptor is ("AggType", column) resolved to a Column aggregate;
-# uniq counts are capped like UniqValueCount's maxNumItems.
-
-_DESCRIPTORS = {
-    "LongValueSum": lambda c: F.sum(F.col(c).cast("long")),
-    "DoubleValueSum": lambda c: F.sum(F.col(c).cast("double")),
-    "LongValueMax": lambda c: F.max(F.col(c).cast("long")),
-    "LongValueMin": lambda c: F.min(F.col(c).cast("long")),
-    "StringValueMax": lambda c: F.max(F.col(c).cast("string")),
-    "StringValueMin": lambda c: F.min(F.col(c).cast("string")),
-    "ValueCount": lambda c: F.count(F.col(c)),
-    "UniqValueCount": lambda c: F.countDistinct(F.col(c)),
-    "ApproxUniqValueCount": lambda c: F.approx_count_distinct(F.col(c)),
-}
-
-
-def descriptor_agg(
-    df: DataFrame, group_cols: list[str], descriptors: list[tuple[str, str, str]]
-) -> DataFrame:
-    """Run many named aggregates in ONE pass / one shuffle.
-
-    ``descriptors`` = list of (agg_type, column, output_alias), mirroring the
-    reference's descriptor strings (``ValueAggregatorJob.java:81``).
-    """
-    aggs = []
-    for agg_type, col, alias in descriptors:
-        if agg_type not in _DESCRIPTORS:
-            raise KeyError(f"unknown aggregator {agg_type!r}; known: {sorted(_DESCRIPTORS)}")
-        aggs.append(_DESCRIPTORS[agg_type](col).alias(alias))
-    return df.groupBy(*group_cols).agg(*aggs)
 
 
 def value_histogram(df: DataFrame, group_cols: list[str], value_col: str) -> DataFrame:

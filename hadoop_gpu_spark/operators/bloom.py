@@ -36,50 +36,20 @@ import pandas as pd  # module-level: pandas_udf type hints resolve against modul
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# One broadcast per distinct bitset per application — NOT one per
-# bloom_might_contain call. Under the module's sizing rule (~10 bits per
-# key) a bitset is multi-hundred-MB at scale, and repeated query
-# construction in a long-lived session (bench warm cycles, sweep
-# replays) would otherwise accumulate unbounded broadcast storage on the
-# driver and every executor. Keyed by (applicationId, md5(bitset)) so a
-# restarted context never resurrects a dead broadcast handle. Lifetime:
-# cached broadcasts live until release_bloom_broadcasts() (or context
-# shutdown) — bounded by the number of DISTINCT bitsets, not calls.
-_BC_CACHE: dict[tuple[str, str], object] = {}
+from hadoop_gpu_spark.session import engine_state
 
 
 def _bloom_broadcast(session, bloom: bytes):
-    app_id = session.sparkContext.applicationId
-    # Evict entries from any PREVIOUS application: after a context
-    # stop/restart in a long-lived process the old app's dead broadcast
-    # handles (and their multi-hundred-MB bitset bytes) would otherwise
-    # stay referenced here forever (r07 ADVICE).
-    for k in [k for k in _BC_CACHE if k[0] != app_id]:
-        del _BC_CACHE[k]
-    key = (app_id, hashlib.md5(bloom).hexdigest())
-    bc = _BC_CACHE.get(key)
-    if bc is None:
-        bc = session.sparkContext.broadcast(bloom)
-        _BC_CACHE[key] = bc
-    return bc
-
-
-def release_bloom_broadcasts() -> int:
-    """Destroy every cached bitset broadcast (call after a job that
-    built large blooms is done with them — bench/sweep teardown does).
-    ``destroy()`` rather than ``unpersist()``: the handles are discarded
-    from the cache here, so the driver-side copy must go too — unpersist
-    alone would leave the driver block resident until context shutdown.
-    Returns the number released."""
-    n = 0
-    for bc in _BC_CACHE.values():
-        try:
-            bc.destroy()
-            n += 1
-        except Exception:  # context already stopped — nothing to release
-            pass
-    _BC_CACHE.clear()
-    return n
+    """One broadcast per distinct bitset per session, not per call:
+    a bitset is multi-hundred-MB at scale, and repeated query
+    construction would otherwise pile up broadcast storage on the
+    driver and every executor. ``hadoop_gpu_spark.session.release``
+    destroys them."""
+    broadcasts = engine_state(session).broadcasts
+    key = hashlib.md5(bloom).hexdigest()
+    if key not in broadcasts:
+        broadcasts[key] = session.sparkContext.broadcast(bloom)
+    return broadcasts[key]
 
 
 def bloom_positions(col: Column, m_bits: int, k: int) -> Column:
@@ -171,8 +141,8 @@ def bloom_might_contain(bloom: bytes, col: Column, m_bits: int, k: int) -> Colum
     key set yields a multi-hundred-MB bitset, and a closure ships with
     EVERY task while a broadcast ships once per executor (torrent
     protocol). Broadcasts are memoized per distinct bitset (see
-    _BC_CACHE) so repeated query construction reuses one handle;
-    ``release_bloom_broadcasts()`` frees them. Falls back to closure
+    _bloom_broadcast) so repeated query construction reuses one handle;
+    ``hadoop_gpu_spark.session.release`` frees them. Falls back to closure
     capture only when no session is active (plain-column unit-test
     contexts).
     """

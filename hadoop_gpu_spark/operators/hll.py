@@ -167,12 +167,17 @@ def hll_estimate(
     m = _check_p(p)
     num = hll_num(p)
     gcols = list(group_cols or [])
+    # An empty register table (no non-NULL value) sums to NULL; 0 keeps
+    # the estimate at 0, as COUNT(DISTINCT) gives.
     agg = registers.groupBy(*gcols).agg(
         F.count(F.lit(1)).alias("regs_hit"),
-        F.sum(
-            F.expr(
-                f"shiftleft(CAST(1 AS BIGINT), CAST({_RANK_MAX} - max_rank AS INT))"
-            )
+        F.coalesce(
+            F.sum(
+                F.expr(
+                    f"shiftleft(CAST(1 AS BIGINT), CAST({_RANK_MAX} - max_rank AS INT))"
+                )
+            ),
+            F.lit(0),
         )
         .cast("long")
         .alias("hit_sum"),
@@ -233,7 +238,7 @@ def hll_distinct_sql(
     agg AS (
       SELECT {gsel}CAST(COUNT(*) AS BIGINT) AS regs_hit,
              CAST({m} - COUNT(*) AS BIGINT) AS v_zero,
-             CAST(SUM((1::BIGINT << ({_RANK_MAX} - max_rank)))
+             CAST(COALESCE(SUM((1::BIGINT << ({_RANK_MAX} - max_rank))), 0)
                   + ({m} - COUNT(*)) * ({1 << _RANK_MAX}::BIGINT) AS BIGINT)
                AS scaled_sum
       FROM regs {gby})

@@ -2373,8 +2373,7 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The intermediate outlives this function (the returned plan reads it
     twice), so it is utils.eager_persist — cached with recomputable
-    lineage, released by release_persisted_frames() in bench/sweep
-    teardown (a bare un-released .persist() — the r03 leak pattern —
+    lineage, released by session.release in bench/test teardown (a bare un-released .persist() — the r03 leak pattern —
     stays banned module-wide by
     tests/test_plans.py::test_persist_always_paired_with_cleanup; the
     r07 eager-localCheckpoint variant was retired because checkpoint

@@ -52,7 +52,7 @@ only ``(doc_id, g_h, w, norm2)`` posting rows move. The posting frame
 is ``eager_persist``-ed so the self-join's two branches read ONE
 materialization (the dual-branch-recompute class, pre-empted at build
 time — the semantic_dedup precedent; released via
-utils.release_persisted_frames in bench/pytest teardown). Per-feature
+session.release in bench/pytest teardown). Per-feature
 join fan-out is bounded by ``max_df^2`` BY CONSTRUCTION (the df filter
 runs before the join), so the pair stream is ≤ |features| * max_df^2
 regardless of corpus size; skew cannot exceed the cap.

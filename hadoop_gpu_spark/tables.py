@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_gpu_spark.session import engine_state
+
 TABLE_NAMES = [
     "region",
     "nation",
@@ -61,26 +63,16 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-# Schema cache keyed on (path, mtime_ns, size): schema inference via
-# spark.read.parquet runs a footer-probe JOB per call, ~0.1-0.2s of
-# driver/JVM round-trip that every query construction paid on every T()
-# (measured: the q_dedup_simhash gate was 0.24s slower than its kernel
-# purely from per-pass loads — the r04 bench-vs-commit discrepancy).
-# With the schema supplied explicitly the read is listing-only. The mtime
-# key keeps it epoch-safe: a regenerated file misses the cache. This also
-# mirrors production shape — a real deployment reads schemas from a
-# catalog, not by re-probing footers per query.
-_schema_cache: dict[tuple, object] = {}
-
-
 def _table_schema(spark: SparkSession, path: str):
+    """The file's schema, memoized in the session's state: inference runs
+    a footer-probe job per read (0.1-0.2 s per ``T()``); with the schema
+    supplied the read is listing-only."""
     st = os.stat(path)
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    sch = _schema_cache.get(key)
-    if sch is None:
-        sch = spark.read.parquet(path).schema
-        _schema_cache[key] = sch
-    return sch
+    schemas = engine_state(spark).schemas
+    if key not in schemas:
+        schemas[key] = spark.read.parquet(path).schema
+    return schemas[key]
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

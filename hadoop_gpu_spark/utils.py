@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from hadoop_gpu_spark.session import engine_state
+
 
 def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:
     """Round-robin repartition when the input has fewer partitions than the
@@ -49,22 +51,12 @@ def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame
         for f in files:
             if not f.endswith(".parquet"):
                 return df
-            groups += _row_group_count(_strip_file_scheme(f))
+            groups += _row_group_count(spark, _strip_file_scheme(f))
             if groups >= target:
                 return df
     except Exception:
         return df
     return df.repartition(target)
-
-
-# (path -> (mtime_ns, size, n_row_groups)) — r13 ADVICE: the footer
-# inspection above runs on the driver per invocation; hot paths that call
-# ensure_min_partitions repeatedly on the same small file list (the bench
-# loop, the test suite) were re-opening every footer each time. mtime+size
-# keying keeps a rewritten file from serving a stale count. Unbounded on
-# purpose: one entry per distinct small-file path seen by THIS driver —
-# the check only runs when len(files) < target, so the key space is tiny.
-_row_group_cache: dict[str, tuple[int, int, int]] = {}
 
 
 def collect_at_most(df: DataFrame, max_rows: int):
@@ -104,22 +96,21 @@ def shuffle_width(spark) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-def _row_group_count(path: str) -> int:
-    """num_row_groups from the parquet footer, memoized per (path, mtime,
-    size). Raises on unreadable/remote paths — the caller treats any
-    failure as "cannot prove fake parallelism" and leaves df alone."""
+def _row_group_count(spark, path: str) -> int:
+    """num_row_groups from the parquet footer, memoized in the session's
+    state per (path, mtime, size). Raises on unreadable/remote paths —
+    the caller treats any failure as "cannot prove fake parallelism" and
+    leaves df alone."""
     import os
 
     import pyarrow.parquet as pq
 
     st = os.stat(path)
-    key = (st.st_mtime_ns, st.st_size)
-    hit = _row_group_cache.get(path)
-    if hit is not None and hit[:2] == key:
-        return hit[2]
-    n = pq.ParquetFile(path).metadata.num_row_groups
-    _row_group_cache[path] = (*key, n)
-    return n
+    key = (path, st.st_mtime_ns, st.st_size)
+    counts = engine_state(spark).row_groups
+    if key not in counts:
+        counts[key] = pq.ParquetFile(path).metadata.num_row_groups
+    return counts[key]
 
 
 def _strip_file_scheme(uri: str) -> str:
@@ -229,17 +220,6 @@ def sweep_stale_scratch() -> int:
     return removed
 
 
-# Every frame eager_persist() handed out, strongest-ref'd so
-# release_persisted_frames() can unpersist them deterministically.
-# Spark's CacheManager keys cached data by logical plan and DEDUPES
-# (re-persisting an equivalent plan is a no-op warning, not a second
-# copy), so the storage bound is the number of DISTINCT persisted plans,
-# not the number of query constructions — strictly better than the
-# localCheckpoint pattern this replaces, which materialized fresh
-# executor-local blocks on every construction.
-_PERSISTED: list[DataFrame] = []
-
-
 def eager_persist(df: DataFrame) -> DataFrame:
     """Materialize a shared intermediate once, keeping RECOMPUTABLE lineage.
 
@@ -260,9 +240,10 @@ def eager_persist(df: DataFrame) -> DataFrame:
     guarantee and correctness never depends on it.
 
     Lifetime: entries stay in the cache manager until
-    ``release_persisted_frames()`` (bench/sweep teardown, test
-    fixtures) or session stop. Use for frames that OUTLIVE their
-    constructor inside a returned plan (q11/q15/q20/q22/
+    ``hadoop_gpu_spark.session.release`` or session stop. Spark's CacheManager
+    dedupes by logical plan, so storage is bounded by the number of
+    DISTINCT persisted plans, not of constructions. Use for frames that
+    OUTLIVE their constructor inside a returned plan (q11/q15/q20/q22/
     q_embedding_outliers). Iterative algorithms that re-derive a frame
     from itself (pq_train's Lloyd loop, connected components) keep
     eager ``localCheckpoint`` instead: there lineage TRUNCATION is the
@@ -274,22 +255,8 @@ def eager_persist(df: DataFrame) -> DataFrame:
 
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df.count()  # eager: materialize before either consumer branch plans
-    _PERSISTED.append(df)
+    engine_state(df.sparkSession).frames.append(df)
     return df
-
-
-def release_persisted_frames() -> int:
-    """Unpersist every frame ``eager_persist`` handed out (idempotent;
-    double-release of deduped plans is harmless). Returns count."""
-    n = 0
-    for df in _PERSISTED:
-        try:
-            df.unpersist(False)
-            n += 1
-        except Exception:  # session already stopped
-            pass
-    _PERSISTED.clear()
-    return n
 
 
 def release_local_checkpoint(df: DataFrame) -> bool:

@@ -50,10 +50,9 @@ def stats_from_plan(plan: str) -> dict:
 
 
 def main(out_dir: str, sf_dir: str) -> int:
-    from hadoop_gpu_spark import get_spark
+    from hadoop_gpu_spark import get_spark, release
     from hadoop_gpu_spark import queries as q
     from hadoop_gpu_spark.plans import formatted_plan
-    from hadoop_gpu_spark.utils import release_persisted_frames
 
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="r16-plan-census")
@@ -74,7 +73,7 @@ def main(out_dir: str, sf_dir: str) -> int:
             census[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
             bad.append(name)
         print(f"{name}: {census[name]}", flush=True)
-        release_persisted_frames()
+        release(spark)
 
     out = {"sf_dir": sf_dir, "bad": bad, "census": census}
     with open(os.path.join(out_dir, "census.json"), "w") as f:

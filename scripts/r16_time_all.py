@@ -25,10 +25,8 @@ sys.path.insert(0, REPO)
 
 
 def main(out_json: str, sf_dir: str, name_re: str | None) -> int:
-    from hadoop_gpu_spark import get_spark
-    from hadoop_gpu_spark.operators.bloom import release_bloom_broadcasts
+    from hadoop_gpu_spark import get_spark, release
     from hadoop_gpu_spark.queries import QUERIES
-    from hadoop_gpu_spark.utils import release_persisted_frames
 
     spark = get_spark(app_name="r16-time-all")
     spark.sparkContext.setLogLevel("ERROR")
@@ -42,8 +40,7 @@ def main(out_json: str, sf_dir: str, name_re: str | None) -> int:
         try:
             passes = []
             for i in range(3):
-                release_persisted_frames()
-                release_bloom_broadcasts()
+                release(spark)
                 t0 = time.perf_counter()
                 QUERIES[name](spark, sf_dir).write.format("noop").mode(
                     "overwrite"

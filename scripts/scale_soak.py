@@ -28,14 +28,12 @@ sys.path.insert(0, REPO)
 
 
 def _run_once(fn, spark, sf_dir: str) -> float:
-    from hadoop_gpu_spark.operators.bloom import release_bloom_broadcasts
-    from hadoop_gpu_spark.utils import release_persisted_frames
+    from hadoop_gpu_spark import release
 
     t0 = time.time()
     fn(spark, sf_dir).count()
     dt = time.time() - t0
-    release_persisted_frames()
-    release_bloom_broadcasts()
+    release(spark)
     return dt
 
 

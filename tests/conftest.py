@@ -4,7 +4,7 @@ import os
 
 import pytest
 
-from hadoop_gpu_spark import get_spark
+from hadoop_gpu_spark import get_spark, release
 
 # Reproducible property tests (VERDICT r05 #1): the suite's green/red
 # verdict must not depend on the day's Hypothesis seeds — an r05 judge
@@ -40,15 +40,9 @@ sweep_stale_scratch()
 def spark():
     s = get_spark(app_name="hgs-tests", shuffle_partitions=8)
     yield s
-    # Executable lifetime contracts (VERDICT r07 #7): the suite
-    # constructs every registered query, so the bloom-bitset broadcasts
-    # and eager_persist cache entries those constructions created are
-    # released here — the docstring claim runs in CI on every session.
-    from hadoop_gpu_spark.operators.bloom import release_bloom_broadcasts
-    from hadoop_gpu_spark.utils import release_persisted_frames
-
-    release_bloom_broadcasts()
-    release_persisted_frames()
+    # The suite constructs every registered query: free the cached
+    # frames and bitset broadcasts those constructions created.
+    release(s)
 
 
 @pytest.fixture(scope="session")

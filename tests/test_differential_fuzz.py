@@ -20,7 +20,7 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -1295,3 +1295,136 @@ def test_known_engine_divergent_array_behaviors(spark):
     ).collect()[0]["d"]
     assert dist == [3, 1, 2]  # first-occurrence order, not sorted
     con.close()
+
+
+# ---------------------------------------------------------------------------
+# Sketch kernels on edge inputs: NULL-heavy columns (all-NULL and empty
+# inputs included) spread over more partitions than rows, so most tasks
+# see zero rows. HLL, CMS and the quantile sketch must equal their DuckDB
+# twins value for value; the bloom-prefiltered semi join must equal a
+# plain left_semi join.
+# ---------------------------------------------------------------------------
+_sparse_key = st.one_of(st.none(), st.none(), st.text(alphabet="abxyz", max_size=3))
+_sparse_group = st.sampled_from(["g1", "g2", None])
+_extra_parts = st.integers(1, 6)
+
+
+def _spread(spark, rows, schema, extra):
+    """``rows`` as a frame with more partitions than rows (empty tasks)."""
+    return spark.createDataFrame(rows, schema).repartition(len(rows) + extra)
+
+
+def _duck_table(rows, ddl):
+    con = duckdb.connect()
+    con.sql(f"CREATE TABLE t ({ddl})")
+    if rows:
+        marks = ", ".join("?" * len(rows[0]))
+        con.executemany(f"INSERT INTO t VALUES ({marks})", [list(r) for r in rows])
+    return con
+
+
+def _rows_equal(got, want):
+    got = sorted((tuple(r) for r in got), key=repr)
+    want = sorted((tuple(r) for r in want), key=repr)
+    assert got == want
+
+
+@given(
+    rows=st.lists(st.tuples(_sparse_group, _sparse_key), max_size=14),
+    grouped=st.booleans(),
+    extra=_extra_parts,
+)
+@example(rows=[], grouped=False, extra=2)
+@example(rows=[(None, None), ("g1", None)], grouped=False, extra=3)
+@example(rows=[("g1", None), ("g2", "a"), (None, "a")], grouped=True, extra=4)
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_hll_edge_inputs_match_duckdb(spark, rows, grouped, extra):
+    from hadoop_gpu_spark.operators.hll import hll_distinct, hll_distinct_sql
+
+    groups = ["g"] if grouped else None
+    df = _spread(spark, rows, "g string, k string", extra)
+    got = hll_distinct(df, "k", groups, p=4).collect()
+    con = _duck_table(rows, "g VARCHAR, k VARCHAR")
+    want = con.sql(hll_distinct_sql("t", "k", groups, p=4)).fetchall()
+    con.close()
+    _rows_equal(got, want)
+    if not grouped and all(k is None for _, k in rows):
+        assert got[0]["est_distinct"] == 0.0  # COUNT(DISTINCT) of nothing
+
+
+@given(
+    texts=st.lists(
+        st.one_of(st.none(), st.none(), st.text(alphabet="ab c", max_size=8)),
+        max_size=10,
+    ),
+    query=st.lists(st.text(alphabet="abc", min_size=1, max_size=2), min_size=1, max_size=3),
+    d=st.integers(1, 3),
+    w=st.integers(1, 5),
+    extra=_extra_parts,
+)
+@example(texts=[], query=["a"], d=2, w=3, extra=2)
+@example(texts=[None, "", " ", "a b"], query=["a", "c"], d=2, w=1, extra=5)
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_cms_edge_inputs_match_duckdb(spark, texts, query, d, w, extra):
+    from hadoop_gpu_spark.operators.cms import cms_token_estimates, cms_token_estimates_sql
+
+    rows = [(t,) for t in texts]
+    docs = _spread(spark, rows, "text string", extra)
+    got = cms_token_estimates(docs, query, d=d, w=w).collect()
+    con = _duck_table(rows, "text VARCHAR")
+    want = con.sql(cms_token_estimates_sql("t", query, d=d, w=w)).fetchall()
+    con.close()
+    _rows_equal(got, want)
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            _sparse_group,
+            st.one_of(
+                st.none(),
+                st.none(),
+                st.sampled_from([float("nan"), float("inf"), -float("inf")]),
+                st.floats(-20, 120, allow_nan=False),
+            ),
+        ),
+        max_size=14,
+    ),
+    grouped=st.booleans(),
+    n_buckets=st.integers(1, 16),
+    extra=_extra_parts,
+)
+@example(rows=[], grouped=False, n_buckets=4, extra=2)
+@example(rows=[("g1", None), ("g2", float("nan")), ("g2", 5.0)], grouped=True, n_buckets=4, extra=4)
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_quantile_sketch_edge_inputs_match_duckdb(spark, rows, grouped, n_buckets, extra):
+    from hadoop_gpu_spark.operators.quantiles import histogram_quantiles, histogram_quantiles_sql
+
+    qs = [0.25, 0.5, 1.0]
+    groups = ["g"] if grouped else None
+    df = _spread(spark, rows, "g string, x double", extra)
+    got = histogram_quantiles(df, "x", qs, groups, 0.0, 100.0, n_buckets, 10).collect()
+    con = _duck_table(rows, "g VARCHAR, x DOUBLE")
+    want = con.sql(
+        histogram_quantiles_sql("t", "x", qs, groups, 0.0, 100.0, n_buckets, 10)
+    ).fetchall()
+    con.close()
+    _rows_equal(got, want)
+
+
+@given(
+    big=st.lists(st.one_of(st.none(), st.integers(0, 12)), max_size=14),
+    small=st.lists(st.one_of(st.none(), st.none(), st.integers(0, 12)), max_size=6),
+    extra=_extra_parts,
+)
+@example(big=[None, 1, 2], small=[], extra=3)
+@example(big=[None, 1], small=[None], extra=3)
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_bloom_semi_join_edge_inputs_match_plain_semi_join(spark, big, small, extra):
+    from hadoop_gpu_spark.operators.bloom import bloom_prefiltered_semi_join
+
+    b = _spread(spark, [(i, k) for i, k in enumerate(big)], "i long, k long", extra)
+    s = _spread(spark, [(k,) for k in small], "k long", extra)
+    got = bloom_prefiltered_semi_join(b, s, "k", m_bits=256, k=3).collect()
+    want = b.join(s, "k", "left_semi").collect()
+    _rows_equal(got, want)

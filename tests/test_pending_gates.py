@@ -178,56 +178,66 @@ def test_bloom_tree_merge_is_bit_identical(spark):
 
 def test_bloom_broadcast_memoized_and_releasable(spark):
     # One broadcast per DISTINCT bitset, however many query constructions
-    # reuse it (the r06 ADVICE leak: a fresh broadcast per call, never
-    # unpersisted, accumulates unbounded storage across bench warm
-    # cycles). release_bloom_broadcasts() empties the cache.
+    # reuse it (a fresh broadcast per call would pile up storage across
+    # bench warm cycles). release() empties the session's broadcasts.
     from pyspark.sql import functions as F
 
     from hadoop_gpu_spark.operators import bloom as bl
+    from hadoop_gpu_spark.session import engine_state, release
 
-    bl.release_bloom_broadcasts()
+    release(spark)
+    broadcasts = engine_state(spark).broadcasts
     bitset = bytes(64)
     df = spark.range(5)
     for _ in range(4):
         df.filter(bl.bloom_might_contain(bitset, F.col("id"), 512, 3)).count()
-    assert len(bl._BC_CACHE) == 1
+    assert len(broadcasts) == 1
     other = bytes([1]) + bytes(63)
     df.filter(bl.bloom_might_contain(other, F.col("id"), 512, 3)).count()
-    assert len(bl._BC_CACHE) == 2
-    assert bl.release_bloom_broadcasts() == 2
-    assert not bl._BC_CACHE
+    assert len(broadcasts) == 2
+    release(spark)
+    assert not broadcasts
 
 
 def test_bloom_cache_evicts_stale_application_entries(spark):
-    # r07 ADVICE: after a context stop/restart in a long-lived process,
-    # the old application's dead broadcast handles must not stay
-    # referenced forever — cache access sweeps entries whose appId is
-    # not the current context's.
+    # After a context stop/restart in a long-lived process, the old
+    # context's state (and its dead broadcast handles) must not serve the
+    # new one: the first lookup from another context replaces the state.
+    import hashlib
+
+    from hadoop_gpu_spark import session
     from hadoop_gpu_spark.operators import bloom as bl
 
-    bl.release_bloom_broadcasts()
-    bl._BC_CACHE[("application_dead_000", "feedface")] = object()
-    bl._bloom_broadcast(spark, bytes(64))
-    app_id = spark.sparkContext.applicationId
-    assert all(k[0] == app_id for k in bl._BC_CACHE)
-    assert len(bl._BC_CACHE) == 1
-    bl.release_bloom_broadcasts()
+    session.release(spark)
+    stale = session.EngineState(context=object())
+    stale.broadcasts["feedface"] = object()
+    session._state = stale
+    try:
+        bl._bloom_broadcast(spark, bytes(64))
+        state = session.engine_state(spark)
+        assert state is not stale
+        assert state.context is spark.sparkContext
+        assert list(state.broadcasts) == [hashlib.md5(bytes(64)).hexdigest()]
+    finally:
+        session.release(spark)
 
 
 def test_bloom_release_destroys_handles(spark):
-    # release_bloom_broadcasts uses destroy() (driver copy freed too,
-    # not just executors) — a destroyed handle is unusable, which is the
-    # executable form of the lifetime claim (VERDICT r07 #7).
+    # release() uses destroy() (driver copy freed too, not just
+    # executors): a destroyed handle is unusable, which is the
+    # executable form of the lifetime claim.
     import pytest as _pytest
     from pyspark.sql import functions as F
 
     from hadoop_gpu_spark.operators import bloom as bl
+    from hadoop_gpu_spark.session import engine_state, release
 
-    bl.release_bloom_broadcasts()
+    release(spark)
     df = spark.range(5)
     df.filter(bl.bloom_might_contain(bytes(64), F.col("id"), 512, 3)).count()
-    (bc,) = bl._BC_CACHE.values()
-    assert bl.release_bloom_broadcasts() == 1
+    (bc,) = engine_state(spark).broadcasts.values()
+    release(spark)
+    assert not engine_state(spark).broadcasts
     with _pytest.raises(Exception):
         bc.destroy()  # second destroy on a dead handle must fail loudly
 

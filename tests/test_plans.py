@@ -294,7 +294,7 @@ def test_persist_always_paired_with_cleanup():
     # gate-query code (queries.py) may not call .persist or
     # .localCheckpoint DIRECTLY at all — an intermediate that must
     # outlive its function uses utils.eager_persist (recomputable
-    # lineage + the release_persisted_frames() teardown path; the
+    # lineage + the session.release() teardown path; the
     # earlier eager-localCheckpoint idiom was retired in r08 because
     # checkpoint blocks are non-replicated and lineage-free — one lost
     # executor at cluster scale kills the returned plan). Iterative
@@ -327,16 +327,60 @@ def test_persist_always_paired_with_cleanup():
             assert n_unpersist > 0, f"{py.name}: .persist() without .unpersist()"
 
 
+def test_no_module_level_mutable_state():
+    # Driver state belongs to session.EngineState, which a new
+    # SparkContext replaces; a module-level container would outlive its
+    # session and leak into the next. Allowed: the query registries, and
+    # two bounded caches that only Python workers fill.
+    import ast
+    import pathlib
+
+    allowed = {
+        "queries.py:QUERIES",
+        "queries.py:ORACLES",
+        "dedup/winnow.py:_shingle_cache",
+        "dedup/simhash.py:_token_cache",
+    }
+
+    def empty_container(node):
+        if isinstance(node, ast.Dict):
+            return not node.keys
+        if isinstance(node, (ast.List, ast.Set)):
+            return not node.elts
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id in ("dict", "list", "set")
+            and not node.args
+            and not node.keywords
+        )
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "hadoop_gpu_spark"
+    found = set()
+    for py in sorted(pkg.rglob("*.py")):
+        for stmt in ast.parse(py.read_text()).body:
+            if isinstance(stmt, ast.Assign):
+                targets = stmt.targets
+            elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+                targets = [stmt.target]
+            else:
+                continue
+            if empty_container(stmt.value):
+                rel = py.relative_to(pkg).as_posix()
+                found |= {f"{rel}:{t.id}" for t in targets if isinstance(t, ast.Name)}
+    assert found - allowed == set(), "module-level mutable state; use session.EngineState"
+
+
 def test_eager_persist_materializes_and_releases(spark):
     # The dual-branch-recompute cure (utils.eager_persist) end-to-end:
     # the frame is cached with recomputable lineage at construction,
     # both consumer branches plan InMemoryTableScans over ONE
-    # InMemoryRelation, and release_persisted_frames() (bench/sweep
-    # teardown) returns the storage — the executable form of the
-    # lifetime contract (VERDICT r07 #7 / r07 ADVICE medium).
+    # InMemoryRelation, and session.release() (bench/test teardown)
+    # returns the storage.
     from pyspark.sql import functions as F
 
     from hadoop_gpu_spark import plans, utils
+    from hadoop_gpu_spark.session import engine_state, release
 
     base = spark.range(1000).select((F.col("id") % 13).alias("k"))
     agg = utils.eager_persist(base.groupBy("k").agg(F.count("*").alias("n")))
@@ -349,9 +393,11 @@ def test_eager_persist_materializes_and_releases(spark):
     # lineage stays recomputable: the cached relation's child plan (the
     # recompute path) is still present under the relation node
     assert "InMemoryRelation" in plan
-    assert utils.release_persisted_frames() >= 1
+    frames = engine_state(spark).frames
+    assert any(f is agg for f in frames)
+    release(spark)
     assert not agg.storageLevel.useMemory and not agg.storageLevel.useDisk
-    assert utils._PERSISTED == []
+    assert frames == []
 
 
 def test_docstring_test_references_exist():

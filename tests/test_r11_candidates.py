@@ -367,11 +367,11 @@ def test_semantic_kernel_blockwise_pairs_invariant(spark, sf_dir, monkeypatch):
 
 
 @pytest.fixture(scope="module", autouse=True)
-def _release_persisted_after():
+def _release_persisted_after(spark):
     yield
-    from hadoop_gpu_spark.utils import release_persisted_frames
+    from hadoop_gpu_spark import release
 
-    release_persisted_frames()
+    release(spark)
 
 
 # ---------------------------------------------------------------------------

@@ -667,11 +667,11 @@ def test_sparse_allpairs_plan_shares_one_posting_relation(spark, sf_dir):
 
 
 @pytest.fixture(scope="module", autouse=True)
-def _release_persisted_after_r12():
+def _release_persisted_after_r12(spark):
     yield
-    from hadoop_gpu_spark.utils import release_persisted_frames
+    from hadoop_gpu_spark import release
 
-    release_persisted_frames()
+    release(spark)
 
 
 # ---------------------------------------------------------------------------
