@@ -16,6 +16,7 @@ import time
 
 from hadoop_gpu_spark import get_spark, release
 from hadoop_gpu_spark.queries import QUERIES
+from hadoop_gpu_spark.session import class_archive_mode
 
 # Bench record notes — cross-round comparison base:
 # - The official BENCH_r05 record (same-7 total 7.17s) ran CONTENDED: its
@@ -293,6 +294,7 @@ def main() -> None:
         "contended": best["contended"],
         "attempts": len(attempts),
         "machine_calib": _machine_calib(),
+        "jvm_class_archive": class_archive_mode(spark),
     }
     record["attempt_totals"] = [a["value"] for a in attempts]
     record["attempt_contended"] = [a["contended"] for a in attempts]

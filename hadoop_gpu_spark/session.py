@@ -16,11 +16,16 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark import SparkContext
 from pyspark.broadcast import Broadcast
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -31,6 +36,102 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS
 # whatever directory the driver runs in.
 ENGINE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PYTHONPATH_CONF = "spark.executorEnv.PYTHONPATH"
+# JVM class-data sharing (CDS): the first driver JVM records the classes it
+# loaded into an archive here at exit; every later one maps that archive
+# instead of parsing ~12,000 classes again. See ARCHITECTURE.md.
+CLASS_ARCHIVE_DIR = os.path.join(ENGINE_PARENT, ".jvm_class_archive")
+# JDK 17 writes a dynamic archive's header, and with it this magic, last.
+CDS_DYNAMIC_MAGIC = bytes.fromhex("a8ab0bf0")
+
+
+def default_driver_memory() -> str:
+    """Half the host's RAM (MemTotal on Linux), at most 16g.
+
+    A fixed 16g heap on a 15 GB host without swap got the driver JVM
+    OOM-killed; half leaves room for the Python workers and the OS."""
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(total_mb // 2, 16 * 1024)}m"
+
+
+def class_archive_options(conf: dict[str, str]) -> str | None:
+    """Driver JVM options that map the class-data archive, or record it.
+
+    None when no driver JVM will be launched (one already runs), or when
+    the JVM could not record: it refuses to when a non-empty directory is
+    on its classpath. Spark's conf directory is on it, so when
+    ``SPARK_CONF_DIR`` is unset and ``$SPARK_HOME/conf`` holds only
+    ``*.template`` files (inert), this points ``SPARK_CONF_DIR`` at an
+    empty directory of the engine's. ``-Xlog:cds*=off``: a recording JVM
+    logs ~580 warnings, and one whose classpath differs from the recorded
+    one says it cannot use the archive (it then runs without it).
+    """
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    if "spark.driver.extraClassPath" in conf or any(
+        os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH")
+    ):
+        return None
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    spark_home = _find_spark_home()
+    jars = os.path.join(spark_home, "jars")
+    if not java or not os.path.isfile(java) or not os.path.isdir(jars):
+        return None
+    own_conf = os.path.join(CLASS_ARCHIVE_DIR, "conf")
+    conf_dir = os.environ.get("SPARK_CONF_DIR")
+    if conf_dir is None:
+        stock = os.path.join(spark_home, "conf")
+        if os.path.isdir(stock) and not all(n.endswith(".template") for n in os.listdir(stock)):
+            return None
+    elif os.path.isdir(conf_dir) and os.listdir(conf_dir):
+        return None
+    try:
+        os.makedirs(own_conf, exist_ok=True)
+    except OSError:
+        return None
+    if not os.access(CLASS_ARCHIVE_DIR, os.W_OK):
+        return None
+    conf_dir = os.environ.setdefault("SPARK_CONF_DIR", own_conf)
+
+    # The archive is valid only for the JVM and classpath that recorded it.
+    key = hashlib.sha256()
+    for path in (java, spark_home):
+        key.update(f"{os.path.realpath(path)} {os.stat(path).st_mtime_ns}\n".encode())
+    for entry in sorted(os.scandir(jars), key=lambda e: e.name):
+        st = entry.stat()
+        key.update(f"{entry.name} {st.st_size} {st.st_mtime_ns}\n".encode())
+    key.update(os.path.realpath(conf_dir).encode())
+    archive = os.path.join(CLASS_ARCHIVE_DIR, f"{key.hexdigest()[:20]}.jsa")
+
+    try:
+        with open(archive, "rb") as f:
+            mapped = f.read(len(CDS_DYNAMIC_MAGIC)) == CDS_DYNAMIC_MAGIC
+    except OSError:
+        mapped = False
+    if not mapped:
+        # Archives of other keys are stale, and each is 140-200 MB.
+        for stale in glob.glob(os.path.join(CLASS_ARCHIVE_DIR, "*.jsa")):
+            if stale != archive:
+                with contextlib.suppress(OSError):
+                    os.remove(stale)
+    flag = "SharedArchiveFile" if mapped else "ArchiveClassesAtExit"
+    return f'-XX:{flag}="{archive}" -Xlog:cds*=off'
+
+
+def class_archive_mode(spark: SparkSession) -> str:
+    """How the driver JVM uses the class-data archive: ``"mapped"`` (the
+    archive is mapped into it), ``"recording"`` (it writes the archive at
+    exit) or ``"off"``."""
+    bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    for arg in bean.getInputArguments():
+        flag, _, archive = arg.partition("=")
+        if flag == "-XX:ArchiveClassesAtExit":
+            return "recording"
+        if flag == "-XX:SharedArchiveFile":
+            # A JVM that cannot use the archive runs without mapping it.
+            with open(f"/proc/{bean.getPid()}/maps") as f:
+                return "mapped" if archive in f.read() else "off"
+    return "off"
 
 
 def get_spark(
@@ -56,15 +157,15 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Partition sizing: the default 128 MB maxPartitionBytes packs this
         # deployment's compressed test tables (10-100 MB) into ONE scan
-        # partition, serializing every query. 8 MB keeps local[32] busy; on
-        # a production cluster raise toward 128 MB as table sizes grow
-        # (rule: total-input / (cores * 2-3) per partition).
+        # partition, serializing every query. 8 MB splits them across
+        # every local core; on a production cluster raise toward 128 MB as
+        # table sizes grow (rule: total-input / (cores * 2-3) per partition).
         .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         .config("spark.sql.files.openCostInBytes", str(1 * 1024 * 1024))
         # events.parquet carries TIMESTAMP(NANOS) which Spark's vectorized
@@ -81,6 +182,12 @@ def get_spark(
     if ENGINE_PARENT not in paths:
         paths.append(ENGINE_PARENT)
     conf[PYTHONPATH_CONF] = os.pathsep.join(paths)
+    # Spark puts these before spark.driver.extraJavaOptions, so a caller's
+    # JVM flags still apply, and a caller's defaultJavaOptions replace them.
+    if "spark.driver.defaultJavaOptions" not in conf:
+        options = class_archive_options(conf)
+        if options:
+            conf["spark.driver.defaultJavaOptions"] = options
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

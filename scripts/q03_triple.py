@@ -20,7 +20,7 @@ between values of THIS run.
 Usage::
 
     python scripts/q03_triple.py /tmp/sf10 /tmp/sf30 /tmp/sf100 \
-        --json artifacts/q03_triple_r16.json [--query NAME] [--conf k=v]
+        --json q03_triple.json [--query NAME] [--conf k=v]
 """
 
 from __future__ import annotations
