@@ -11,6 +11,11 @@ Salting trades one extra (cheap, partial) aggregation for an even shuffle:
 - ``salted_join``: replicate the small side per salt value; the big side
   gets a random-but-deterministic salt per row — each hot key fans out
   over ``n_salts`` reducers.
+
+The salt never reaches either operator's output, so it only has to be
+deterministic (the same row gets the same salt on every retry and under
+any partitioning), not portable to another engine: Spark's native
+``xxhash64`` does that in one expression per row.
 """
 
 from __future__ import annotations
@@ -18,13 +23,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_gpu_spark.functions.hashing import bucket
-
 
 def with_salt(df: DataFrame, n_salts: int, salt_source: str, alias: str = "__salt") -> DataFrame:
     """Deterministic salt in [0, n_salts) derived from a (unique-ish)
-    column — reproducible across retries, unlike rand()."""
-    return df.withColumn(alias, bucket(salt_source, n_salts, seed=7))
+    column — reproducible across retries, unlike rand(). A NULL source
+    hashes to the seed, so it gets a real salt too."""
+    return df.withColumn(alias, F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)))
 
 
 def salted_agg(

@@ -1259,9 +1259,14 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue = F.col("l_extendedprice").cast("decimal(12,2)") * (
         F.lit(1) - F.col("l_discount").cast("decimal(12,2)")
     )
+    # Fact table first (ARCHITECTURE.md "Fact table first"): Spark sizes
+    # a join as the product of its children, so customer ⋈ orders would
+    # look larger than lineitem and lineitem would become the broadcast
+    # build side. Joining lineitem first builds on orders and customer
+    # and streams lineitem; q05 and q10 use the same order.
     j = (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, customer.c_custkey == orders.o_custkey)
     )
     g = j.groupBy("l_orderkey").agg(
         F.sum(revenue).cast("double").alias("revenue"),
@@ -1300,8 +1305,8 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1) - F.col("l_discount").cast("decimal(12,2)")
     )
     j = (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, customer.c_custkey == orders.o_custkey)
         .join(
             supplier,
             (li.l_suppkey == supplier.s_suppkey)
@@ -2114,8 +2119,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1) - F.col("l_discount").cast("decimal(12,2)")
     )
     j = (
-        customer.join(orders, customer.c_custkey == orders.o_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
+        li.join(orders, li.l_orderkey == orders.o_orderkey)
+        .join(customer, customer.c_custkey == orders.o_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
     )
     g = j.groupBy("c_custkey").agg(

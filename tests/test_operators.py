@@ -302,6 +302,8 @@ def test_salted_agg_matches_plain(spark, sf_dir):
     from hadoop_gpu_spark.tables import load_table
 
     li = load_table(spark, "lineitem", sf_dir)
+    # one row whose salt source is NULL must still be counted
+    li = li.unionByName(li.limit(1).withColumn("l_orderkey", F.lit(None).cast("long")))
     plain = {
         (r["l_returnflag"],): (r["cnt"], r["sq"])
         for r in li.groupBy("l_returnflag")
@@ -335,6 +337,36 @@ def test_salted_join_matches_plain(spark, sf_dir):
     plain = orders.join(customer, "k").count()
     salted = salted_join(orders, customer, "k", n_salts=4, big_salt_source="o_orderkey").count()
     assert salted == plain
+
+
+def test_salted_join_keeps_rows_with_null_salt_source(spark):
+    from hadoop_gpu_spark.operators.skew import salted_join
+
+    big = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, None), (3, 13)], "k long, src long"
+    )
+    small = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    plain = sorted(big.join(small, "k").collect())
+    salted = sorted(salted_join(big, small, "k", n_salts=4, big_salt_source="src").collect())
+    assert len(plain) == 3
+    assert salted == plain
+
+
+def test_with_salt_is_in_range_and_partition_independent(spark):
+    from hadoop_gpu_spark.operators.skew import with_salt
+
+    n = 5
+    sources = [-(2**63), -7, -1, 0, None, 1, 6, 2**63 - 1] + list(range(100, 140))
+    df = spark.createDataFrame(list(enumerate(sources)), "id long, src long")
+
+    def salts(frame):
+        return {r["id"]: r["__salt"] for r in with_salt(frame, n, "src").collect()}
+
+    one, seven = salts(df.repartition(1)), salts(df.repartition(7))
+    assert one == seven
+    assert len(one) == len(sources)
+    assert all(0 <= v < n for v in one.values())
+    assert len(set(one.values())) == n  # the 48 sources reach every salt
 
 
 def test_cogroup_tagged_join_equals_inner_join(spark):

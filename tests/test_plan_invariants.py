@@ -494,6 +494,61 @@ SCAN_BUDGET = {
 }
 
 
+# Queries whose plan may broadcast a subtree that scans lineitem, the fact
+# table. The reference's map-side join ships the SMALL table to every task
+# (DistributedCache) and streams the big input through map(); a broadcast
+# lineitem is the reverse — collected to the driver and hashed by one
+# thread. It happens when a dimension join comes first: Spark sizes a join
+# as the product of its children, so customer ⋈ orders looks larger than
+# lineitem (q03/q05/q10 join lineitem first for this reason). Every entry
+# below broadcasts something bounded by a key domain rather than by
+# lineitem's row count, or cannot build on the other side.
+FACT_BROADCAST_ALLOWED = {
+    "q04_order_priority": "left-semi build: a left-semi hash join can only "
+    "build its right side (the two-column lineitem projection); past the "
+    "broadcast threshold it becomes a sort-merge semi join",
+    "q11_important_stock": "build side is a lineitem aggregate: the 1-row "
+    "total of the cached |parts|-row per-part sums",
+    "q15_top_supplier": "build sides are lineitem aggregates: the 1-row "
+    "max of the cached |suppliers|-row revenue frame, and at small scale "
+    "that frame itself",
+    "q17_small_quantity_revenue": "build side is a lineitem aggregate: the "
+    "|parts|-row per-part average quantity",
+    "q20_potential_promotion": "build sides are lineitem aggregates: the "
+    "1-row threshold and the |suppliers|-row left-semi build",
+}
+
+_PLAN_NODE = re.compile(r"^(?P<indent>[\s:|+*-]*?)(?P<name>[A-Za-z].*?) \((?P<id>\d+)\)\s*$")
+
+
+def _broadcasts_over(plan: str, table: str) -> bool:
+    """Whether a BroadcastExchange in a formatted plan has a subtree that
+    scans ``<table>.parquet``. The tree header gives nesting by the column
+    where each node name starts; the details section maps scan ids to files."""
+    tree, _, details = plan.partition("\n\n")
+    nodes = [
+        (len(m["indent"]), m["name"], m["id"])
+        for m in map(_PLAN_NODE.match, tree.splitlines())
+        if m
+    ]
+    scans = {
+        nid
+        for nid, path in re.findall(
+            r"^\((\d+)\) Scan parquet.*\n(?:.*\n)*?Location: .*?([^/\s]+)\]$", details, re.M
+        )
+        if path == f"{table}.parquet"
+    }
+    for i, (col, name, _) in enumerate(nodes):
+        if not name.startswith("BroadcastExchange"):
+            continue
+        for col2, name2, nid2 in nodes[i + 1:]:
+            if col2 <= col:
+                break
+            if name2.startswith("Scan parquet") and nid2 in scans:
+                return True
+    return False
+
+
 def _exchange_count(plan: str) -> int:
     return len(re.findall(r"^\s*\(\d+\) Exchange\b", plan, re.M))
 
@@ -503,10 +558,10 @@ def _scan_count(plan: str) -> int:
 
 
 def _audit(queries, spark, sf_dir, budgets, scan_budgets=None):
-    """Run the four-question audit; return the violation lists."""
+    """Run the plan audit; return the violation lists."""
     scan_budgets = scan_budgets or {}
     row_python, cartesian, over_budget, under_budget = [], [], [], []
-    scan_drift = []
+    scan_drift, fact_broadcast = [], []
     for name, fn in queries.items():
         if name in STREAMING_SNAPSHOT:
             continue
@@ -527,7 +582,9 @@ def _audit(queries, spark, sf_dir, budgets, scan_budgets=None):
         pinned_scans = scan_budgets.get(name)
         if pinned_scans is not None and _scan_count(plan) != pinned_scans:
             scan_drift.append((name, _scan_count(plan), pinned_scans))
-    return row_python, cartesian, over_budget, under_budget, scan_drift
+        if _broadcasts_over(plan, "lineitem"):
+            fact_broadcast.append(name)
+    return row_python, cartesian, over_budget, under_budget, scan_drift, fact_broadcast
 
 
 def test_registry_plan_invariants(spark, sf_dir):
@@ -549,7 +606,7 @@ def test_registry_plan_invariants(spark, sf_dir):
     )
 
     budgets = {**HEADLINE_EXCHANGE_BUDGET, **EXTRA_EXCHANGE_BUDGET}
-    row_python, cartesian, over_budget, under_budget, scan_drift = _audit(
+    row_python, cartesian, over_budget, under_budget, scan_drift, fact_broadcast = _audit(
         QUERIES, spark, sf_dir, budgets, SCAN_BUDGET
     )
 
@@ -573,6 +630,12 @@ def test_registry_plan_invariants(spark, sf_dir):
         "is the dual-branch-recompute signature: prove the new scan is a "
         "semantically distinct pass and re-pin with the justification; a "
         "shrunk count is a win — re-pin and note it"
+    )
+    assert set(fact_broadcast) == set(FACT_BROADCAST_ALLOWED), (
+        f"lineitem broadcast: unreviewed={sorted(set(fact_broadcast) - set(FACT_BROADCAST_ALLOWED))}, "
+        f"stale={sorted(set(FACT_BROADCAST_ALLOWED) - set(fact_broadcast))} — join the "
+        "fact table first so dimensions are the build side, or allow it here "
+        "with the reason its build side is bounded"
     )
 
 
@@ -971,7 +1034,7 @@ def test_audit_flags_misnamed_stream_query(spark, sf_dir):
         return spark_.range(10).select(bad_udf("id").alias("x"))
 
     assert "q_stream_fake" not in STREAMING_SNAPSHOT
-    row_python, _, _, _, _ = _audit(
+    row_python, *_ = _audit(
         {"q_stream_fake": q_stream_fake}, spark, sf_dir, {}
     )
     assert row_python == ["q_stream_fake"]
@@ -991,7 +1054,31 @@ def test_scan_audit_flags_a_dual_branch_recompute(spark, sf_dir):
         mx = li.agg(F.max("l_quantity").alias("m"))
         return li.join(F.broadcast(mx)).filter(F.col("l_quantity") == F.col("m"))
 
-    _, _, _, _, scan_drift = _audit(
+    _, _, _, _, scan_drift, _ = _audit(
         {"q_diseased": q_diseased}, spark, sf_dir, {}, {"q_diseased": 1}
     )
     assert scan_drift == [("q_diseased", 2, 1)]
+
+
+def test_audit_flags_a_broadcast_fact_table(spark, sf_dir):
+    # Prove the detector detects: the dimension-first join order that q03
+    # used to have makes the planner broadcast lineitem; the fact-first
+    # order of the same joins does not.
+    from hadoop_gpu_spark.tables import load_table
+
+    def tables(spark_, sf):
+        return [load_table(spark_, t, sf) for t in ("customer", "orders", "lineitem")]
+
+    def q_dimension_first(spark_, sf):
+        c, o, li = tables(spark_, sf)
+        return c.join(o, c.c_custkey == o.o_custkey).join(li, li.l_orderkey == o.o_orderkey)
+
+    def q_fact_first(spark_, sf):
+        c, o, li = tables(spark_, sf)
+        return li.join(o, li.l_orderkey == o.o_orderkey).join(c, c.c_custkey == o.o_custkey)
+
+    *_, fact_broadcast = _audit(
+        {"q_dimension_first": q_dimension_first, "q_fact_first": q_fact_first},
+        spark, sf_dir, {},
+    )
+    assert fact_broadcast == ["q_dimension_first"]
