@@ -31,16 +31,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def inner_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
-    """`inner(a, b)` — reference M/join/InnerJoinRecordReader.java:30."""
-    return left.join(right, on=on, how="inner")
-
-
-def outer_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
-    """`outer(a, b)` — reference M/join/OuterJoinRecordReader.java:30."""
-    return left.join(right, on=on, how="full_outer")
-
-
 def semi_join(left: DataFrame, right: DataFrame, on: list[str] | str) -> DataFrame:
     """Beyond-reference (SURVEY.md §2.3 'not implemented')."""
     return left.join(right, on=on, how="left_semi")

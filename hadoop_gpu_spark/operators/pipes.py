@@ -255,22 +255,6 @@ def _read_text(stream) -> bytes:
     return data
 
 
-class DictSumParam:
-    """AccumulatorParam merging {name: long} counter dicts — the engine
-    side of the Pipes counter surface (REGISTER_COUNTER/INCREMENT_COUNTER,
-    BinaryProtocol.java:129-137). Plain summing merge: at-least-once under
-    task retries. Production path is :class:`PipesCounters`, which
-    namespaces by (stage, partition) for exactly-once."""
-
-    def zero(self, value):
-        return dict(value) if value else {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            a[k] = a.get(k, 0) + v
-        return a
-
-
 class _PerTaskReplaceParam:
     """AccumulatorParam over {(stage_id, partition_id): {name: long}} that
     REPLACES a task's entry on merge — re-executions of the same task

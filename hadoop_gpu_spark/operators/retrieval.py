@@ -14,14 +14,18 @@ term matching with document-length normalization.
   shuffles.
 - df rides the tf frame as COUNT(*) OVER (PARTITION BY term) — the
   q_tfidf_topterms pattern: no vocabulary broadcast, no second tokenize
-  pass; N and the corpus token total either arrive precomputed via
-  ``corpus_stats`` (ONE corpus scan total — the per-corpus-stats-table
-  path a 100 TB deployment runs) or ride the plan as a broadcast
-  1-row aggregate (two in-plan scans, zero driver barriers — the
-  operator is a pure lazy plan constructor either way; no collect).
-- scoring is pure column arithmetic; the per-query top-k window runs
-  over candidate rows only, partitioned by qid (|queries| partitions of
-  |candidate-doc| rows — never corpus rows).
+  pass; N and the corpus token total ride the plan as a broadcast 1-row
+  aggregate (two in-plan scans, zero driver barriers — the operator is a
+  pure lazy plan constructor; no collect).
+- scoring is pure column arithmetic; the per-query top-k
+  (``sort.top_k_per_group``) runs over candidate rows only, partitioned
+  by qid (|queries| partitions of |candidate-doc| rows — never corpus
+  rows).
+
+One lattice serves BM25, BM25F and MoreLikeThis, in both engines:
+``_idf9``/``_IDF9_SQL`` (idf), ``_saturation``/``_saturation_sql``
+(tf saturation), ``_contrib``/``_contrib_sql`` (per-term contribution)
+and ``_ranked_scores``/``_ranked_tail_sql`` (score-to-rank).
 
 Determinism (oracle rules, queries.py module docstring): ln() differs
 in the last ulp between engines, so idf is round(ln(...), 9) BEFORE any
@@ -36,11 +40,13 @@ from Spark's double path (the histogram_quantiles_sql lesson).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# Shared tokenizer contract with functions/text + the _SQL_TOKS twin:
+from hadoop_gpu_spark.operators.sort import top_k_per_group
+
+# Shared tokenizer contract with functions/text + the _sql_toks twin:
 # whitespace-delimited, empties dropped.
 _DL_RE = r"\S+"
 
@@ -48,6 +54,15 @@ _DL_RE = r"\S+"
 def _query_terms(queries: list[tuple[str, str]]) -> list[tuple[str, str]]:
     out = {(qid, t) for qid, qtext in queries for t in qtext.split()}
     return sorted(out)
+
+
+def _query_tf_counts(queries: list[tuple[str, str]]) -> list[tuple[str, str, int]]:
+    """(qid, term, tfq): each query's own term frequencies, sorted."""
+    qtf: dict[tuple[str, str], int] = {}
+    for qid, qtext in queries:
+        for t in qtext.split():
+            qtf[(qid, t)] = qtf.get((qid, t), 0) + 1
+    return [(q, t, c) for (q, t), c in sorted(qtf.items())]
 
 
 def _doc_token_stream(
@@ -82,6 +97,173 @@ def _doc_token_stream(
     return arr.select(id_col, F.size("__toks").alias("__dl"), gen)
 
 
+# --------------------------------------------------------------------------
+# The BM25 lattice (Spark side): corpus stats, idf, saturation, ranking
+# --------------------------------------------------------------------------
+
+
+def _corpus_counts(docs: DataFrame, text_col: str) -> DataFrame:
+    """1-row (__n, __tt): the corpus' document and token counts. Every
+    caller builds the identical plan, so a persisted copy (rerank) is
+    substituted by the cache manager wherever this subtree recurs."""
+    return docs.agg(
+        F.count(F.lit(1)).cast("long").alias("__n"),
+        F.sum(F.regexp_count(F.col(text_col), F.lit(_DL_RE))).cast("long").alias("__tt"),
+    )
+
+
+def _query_term_tf(
+    docs: DataFrame,
+    queries: list[tuple[str, str]],
+    id_col: str,
+    text_col: str,
+    *tf_aggs: Column,
+    pos: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """(tf, qterms): per-(doc, query term) aggregates ``tf_aggs`` over the
+    token stream pruned to the query terms AT THE SCAN, with ``df``
+    riding as a window count (no vocabulary broadcast); ``qterms`` is the
+    (qid, term) frame the contributions join to."""
+    qt = _query_terms(queries)
+    if not qt:
+        raise ValueError("queries must contain at least one term")
+    terms = sorted({t for _, t in qt})
+    toks = _doc_token_stream(docs, id_col, text_col, pos=pos).filter(
+        F.col("term").isin(terms)
+    )
+    tf = toks.groupBy(id_col, "__dl", "term").agg(*tf_aggs)
+    with_df = tf.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+    qterms = docs.sparkSession.createDataFrame(qt, schema="qid string, term string")
+    return with_df, qterms
+
+
+def _idf9() -> Column:
+    """Plus-one BM25 idf ln((N - df + 0.5)/(df + 0.5) + 1) over the
+    ``__n``/``df`` columns, rounded at 9 before any multiplication."""
+    return F.round(
+        F.log(
+            ((F.col("__n") - F.col("df")) + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+            + F.lit(1.0)
+        ),
+        9,
+    )
+
+
+def _length_norm(b: float) -> Column:
+    """BM25 document-length normalization 1 - b + b*dl/avgdl, with
+    dl/avgdl spelled (dl * N) / total_tokens in exact-int-valued
+    doubles over the ``__dl``/``__n``/``__tt`` columns."""
+    dl_over_avgdl = (F.col("__dl").cast("double") * F.col("__n").cast("double")) / F.col(
+        "__tt"
+    ).cast("double")
+    return F.lit(1.0 - b) + F.lit(b) * dl_over_avgdl
+
+
+def _saturation(tf: Column, k1: float, norm: Column | None = None) -> Column:
+    """tf*(k1+1) / (tf + k1*norm). BM25F passes its already
+    length-normalized tf and no ``norm`` (denominator tf + k1)."""
+    denom = F.lit(float(k1)) if norm is None else F.lit(float(k1)) * norm
+    return (tf * F.lit(k1 + 1.0)) / (tf + denom)
+
+
+def _contrib(idf9: Column, sat: Column) -> Column:
+    """Per-(query, doc, term) contribution, round-9'd then exact
+    DECIMAL(28,9) so per-document sums are order-independent."""
+    return F.round(idf9 * sat, 9).cast("decimal(28,9)")
+
+
+def _ranked_scores(contrib: DataFrame, id_col: str, top_k: int) -> DataFrame:
+    """(qid, id_col, rank, score): sum ``__c`` per (qid, doc), rank on
+    the exact decimal sum desc with id ties, report the score as a
+    round-6 double."""
+    per_doc = contrib.groupBy("qid", id_col).agg(F.sum("__c").alias("__s"))
+    return top_k_per_group(
+        per_doc, ["qid"], [F.col("__s").desc(), F.col(id_col)], top_k
+    ).select(
+        "qid",
+        id_col,
+        "rank",
+        F.round(F.col("__s").cast("double"), 6).alias("score"),
+    )
+
+
+# --------------------------------------------------------------------------
+# The BM25 lattice (DuckDB side): the same operations, operand order and
+# DOUBLE casts as the Spark helpers above
+# --------------------------------------------------------------------------
+
+
+def _sql_toks(text_col: str) -> str:
+    return f"list_filter(regexp_split_to_array({text_col}, '\\s+'), x -> x <> '')"
+
+
+def _stats_sql(table: str, text_col: str) -> str:
+    """The ``stats`` CTE: :func:`_corpus_counts` as (n, tt)."""
+    return f"""stats AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(len({_sql_toks(text_col)})) AS BIGINT) AS tt
+      FROM {table})"""
+
+
+_IDF9_SQL = """round(ln(((CAST(n AS DOUBLE) - CAST(df AS DOUBLE)) + CAST(0.5 AS DOUBLE))
+                   / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
+                   + CAST(1.0 AS DOUBLE)), 9)"""
+
+
+def _length_norm_sql(b: float, dl: str) -> str:
+    return (
+        f"CAST({1.0 - b!r} AS DOUBLE) + CAST({float(b)!r} AS DOUBLE) "
+        f"* ((CAST({dl} AS DOUBLE) * CAST(n AS DOUBLE)) / CAST(tt AS DOUBLE))"
+    )
+
+
+def _saturation_sql(tf: str, k1: float, norm: str | None = None) -> str:
+    k1_sql = f"CAST({float(k1)!r} AS DOUBLE)"
+    denom = k1_sql if norm is None else f"{k1_sql} * ({norm})"
+    return f"(({tf} * CAST({k1 + 1.0!r} AS DOUBLE)) / ({tf} + {denom}))"
+
+
+def _contrib_sql(idf9: str, sat: str) -> str:
+    return f"CAST(round({idf9} * {sat}, 9) AS DECIMAL(28,9))"
+
+
+def _query_terms_in_sql(queries: list[tuple[str, str]]) -> str:
+    """The distinct query terms as a SQL IN-list body."""
+    return ", ".join(f"'{t}'" for t in sorted({t for _, t in _query_terms(queries)}))
+
+
+def _query_contrib_sql(queries: list[tuple[str, str]], id_col: str, sat: str) -> str:
+    """The ``wdf`` and ``contrib`` CTEs over ``tf`` and ``stats``: df as a
+    window count, then each query term's contribution under ``sat`` —
+    the SQL half of :func:`_query_term_tf` and :func:`_contrib`."""
+    qt_values = ", ".join(f"('{qid}', '{t}')" for qid, t in _query_terms(queries))
+    return f"""wdf AS (
+      SELECT *, COUNT(*) OVER (PARTITION BY term) AS df FROM tf),
+    contrib AS (
+      SELECT qid, {id_col}, {_contrib_sql(_IDF9_SQL, sat)} AS c
+      FROM wdf
+      JOIN (VALUES {qt_values}) AS q(qid, term) USING (term)
+      CROSS JOIN stats)"""
+
+
+def _ranked_tail_sql(id_col: str, top_k: int) -> str:
+    """The ``ranked`` CTE over ``contrib(qid, id_col, c)`` plus the final
+    SELECT — :func:`_ranked_scores`."""
+    return f"""ranked AS (
+      SELECT qid, {id_col}, SUM(c) AS s,
+             CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY SUM(c) DESC, {id_col})
+                  AS BIGINT) AS rank
+      FROM contrib GROUP BY qid, {id_col})
+    SELECT qid, {id_col}, rank, round(CAST(s AS DOUBLE), 6) AS score
+    FROM ranked WHERE rank <= {top_k}
+    """
+
+
+# --------------------------------------------------------------------------
+# BM25 (Okapi)
+# --------------------------------------------------------------------------
+
+
 def bm25_topk(
     docs: DataFrame,
     queries: list[tuple[str, str]],
@@ -91,7 +273,6 @@ def bm25_topk(
     top_k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_stats: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(qid, doc_id, rank, score): the top_k documents per query under
     Okapi BM25 with idf = ln((N - df + 0.5)/(df + 0.5) + 1) (the
@@ -99,84 +280,23 @@ def bm25_topk(
     tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)), dl/avgdl spelled as
     (dl * N) / total_tokens in exact-int-valued doubles.
 
-    ``corpus_stats`` = (n_docs, total_tokens): pass the corpus' doc and
-    token counts (maintained once per corpus — the stats-table path) for
-    a single-scan plan; omit them and the plan computes both via a
-    broadcast 1-row aggregate (second projection-pruned scan, still zero
-    driver round-trips — construction never runs a job).
+    The corpus' doc and token counts come from a broadcast 1-row
+    aggregate (second projection-pruned scan, still zero driver
+    round-trips — construction never runs a job).
 
     Ties rank deterministically: exact decimal score desc, then id_col.
     Documents sharing no term with a query simply never rank; a query
     whose terms are all absent from the corpus yields no rows.
     """
-    from hadoop_gpu_spark.operators.fields import tokenize
-
-    qt = _query_terms(queries)
-    if not qt:
-        raise ValueError("queries must contain at least one term")
-    terms = sorted({t for _, t in qt})
-    spark = docs.sparkSession
-
-    toks = _doc_token_stream(docs, id_col, text_col).filter(
-        F.col("term").isin(terms)
+    tf, qterms = _query_term_tf(
+        docs, queries, id_col, text_col, F.count(F.lit(1)).alias("tf")
     )
-    tf = toks.groupBy(id_col, "__dl", "term").agg(F.count(F.lit(1)).alias("tf"))
-    w_term = Window.partitionBy("term")
-    with_df = tf.withColumn("df", F.count(F.lit(1)).over(w_term))
-
-    # Corpus stats ride the candidate frame as the long columns
-    # __n/__tt — literals when precomputed, else a broadcast 1-row
-    # aggregate cross-joined onto the (tiny) post-filter frame. All
-    # downstream arithmetic is column-vs-column either way, and the
-    # int-valued doubles are exact in both spellings.
-    if corpus_stats is None:
-        stats = docs.agg(
-            F.count(F.lit(1)).cast("long").alias("__n"),
-            F.sum(F.regexp_count(F.col(text_col), F.lit(_DL_RE)))
-            .cast("long")
-            .alias("__tt"),
-        )
-        with_df = with_df.crossJoin(F.broadcast(stats))
-    else:
-        n_docs, total_tokens = corpus_stats
-        with_df = with_df.withColumn(
-            "__n", F.lit(int(n_docs)).cast("long")
-        ).withColumn("__tt", F.lit(int(total_tokens)).cast("long"))
-
-    idf9 = F.round(
-        F.log(
-            ((F.col("__n") - F.col("df")) + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        ),
-        9,
+    stats = _corpus_counts(docs, text_col)
+    contrib = tf.crossJoin(F.broadcast(stats)).withColumn(
+        "__c", _contrib(_idf9(), _saturation(F.col("tf"), k1, _length_norm(b)))
     )
-    dl_over_avgdl = (F.col("__dl").cast("double") * F.col("__n").cast("double")) / F.col(
-        "__tt"
-    ).cast("double")
-    ratio = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl_over_avgdl)
-    )
-    contrib = with_df.withColumn(
-        "__c", F.round(idf9 * ratio, 9).cast("decimal(28,9)")
-    )
-
-    qterms = spark.createDataFrame(qt, schema="qid string, term string")
-    per_doc = (
-        contrib.join(qterms, "term")  # unhinted: AQE broadcasts the tiny side
-        .groupBy("qid", id_col)
-        .agg(F.sum("__c").alias("__s"))
-    )
-    w_rank = Window.partitionBy("qid").orderBy(F.col("__s").desc(), F.col(id_col))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "qid",
-            id_col,
-            "rank",
-            F.round(F.col("__s").cast("double"), 6).alias("score"),
-        )
-    )
+    # unhinted qterms join: AQE broadcasts the tiny side
+    return _ranked_scores(contrib.join(qterms, "term"), id_col, top_k)
 
 
 def bm25_topk_sql(
@@ -194,51 +314,21 @@ def bm25_topk_sql(
     same decimal accumulation, same double-cast points. Deliberately
     naive CTE SQL (auditability over shuffle count — the funnel_sql
     stance). Corpus stats are CTE scalars; they equal the Spark side's
-    in-plan aggregate (or precomputed literals) by construction, and
-    every arithmetic step is spelled with the same operand order and
-    explicit DOUBLE casts."""
-    qt = _query_terms(queries)
-    terms_list = ", ".join(f"'{t}'" for t in sorted({t for _, t in qt}))
-    qt_values = ", ".join(f"('{qid}', '{t}')" for qid, t in qt)
-    toks = f"list_filter(regexp_split_to_array({text_col}, '\\s+'), x -> x <> '')"
-    k1p1 = repr(k1 + 1.0)
-    one_m_b = repr(1.0 - b)
+    in-plan aggregate by construction, and every arithmetic step is
+    spelled with the same operand order and explicit DOUBLE casts."""
+    toks = _sql_toks(text_col)
+    sat = _saturation_sql("CAST(tf AS DOUBLE)", k1, _length_norm_sql(b, "dl"))
     return f"""
-    WITH stats AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(len({toks})) AS BIGINT) AS tt
-      FROM {table}),
+    WITH {_stats_sql(table, text_col)},
     tf AS (
       SELECT {id_col}, dl, term, CAST(COUNT(*) AS BIGINT) AS tf
       FROM (
         SELECT {id_col}, len({toks}) AS dl, unnest({toks}) AS term
         FROM {table})
-      WHERE term IN ({terms_list})
+      WHERE term IN ({_query_terms_in_sql(queries)})
       GROUP BY {id_col}, dl, term),
-    wdf AS (
-      SELECT *, COUNT(*) OVER (PARTITION BY term) AS df FROM tf),
-    contrib AS (
-      SELECT qid, {id_col},
-             CAST(round(
-               round(ln(((CAST(n AS DOUBLE) - CAST(df AS DOUBLE)) + CAST(0.5 AS DOUBLE))
-                         / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                         + CAST(1.0 AS DOUBLE)), 9)
-               * ((CAST(tf AS DOUBLE) * CAST({k1p1} AS DOUBLE))
-                  / (CAST(tf AS DOUBLE) + CAST({repr(float(k1))} AS DOUBLE)
-                     * (CAST({one_m_b} AS DOUBLE) + CAST({repr(float(b))} AS DOUBLE)
-                        * ((CAST(dl AS DOUBLE) * CAST(n AS DOUBLE)) / CAST(tt AS DOUBLE))))),
-               9) AS DECIMAL(28,9)) AS c
-      FROM wdf
-      JOIN (VALUES {qt_values}) AS q(qid, term) USING (term)
-      CROSS JOIN stats),
-    ranked AS (
-      SELECT qid, {id_col}, SUM(c) AS s,
-             CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY SUM(c) DESC, {id_col})
-                  AS BIGINT) AS rank
-      FROM contrib GROUP BY qid, {id_col})
-    SELECT qid, {id_col}, rank, round(CAST(s AS DOUBLE), 6) AS score
-    FROM ranked WHERE rank <= {top_k}
-    """
+    {_query_contrib_sql(queries, id_col, sat)},
+    {_ranked_tail_sql(id_col, top_k)}"""
 
 
 # --------------------------------------------------------------------------
@@ -269,7 +359,7 @@ def bm25f_topk(
     rest). Per field f: the soft-normalized term frequency
     ``tf~_f = tf_f / (1 + b_f * (len_f/avglen_f - 1))``; the weighted
     combination ``tfc = w_title*tf~_title + w_body*tf~_body`` feeds ONE
-    shared saturation ``idf * tfc*(k1+1)/(k1 + tfc)`` — boosting a
+    shared saturation ``idf * tfc*(k1+1)/(tfc + k1)`` — boosting a
     field scales its term occurrences BEFORE saturation, which is
     BM25F's whole point over naively summing per-field BM25 scores
     (a term filling the title saturates like a term filling the body;
@@ -294,28 +384,15 @@ def bm25f_topk(
     zero-token field corpus-wide (total_f = 0) contributes 0 via an
     explicit CASE guard rather than raising under ANSI division.
     """
-    from hadoop_gpu_spark.operators.fields import tokenize
-
-    qt = _query_terms(queries)
-    if not qt:
-        raise ValueError("queries must contain at least one term")
-    terms = sorted({t for _, t in qt})
-    spark = docs.sparkSession
-
-    toks = _doc_token_stream(docs, id_col, text_col, pos=True).filter(
-        F.col("term").isin(terms)
+    tf, qterms = _query_term_tf(
+        docs,
+        queries,
+        id_col,
+        text_col,
+        F.sum(F.when(F.col("__pos") < title_len, 1).otherwise(0)).cast("long").alias("tf_t"),
+        F.sum(F.when(F.col("__pos") >= title_len, 1).otherwise(0)).cast("long").alias("tf_b"),
+        pos=True,
     )
-    tf = toks.groupBy(id_col, "__dl", "term").agg(
-        F.sum(F.when(F.col("__pos") < title_len, 1).otherwise(0))
-        .cast("long")
-        .alias("tf_t"),
-        F.sum(F.when(F.col("__pos") >= title_len, 1).otherwise(0))
-        .cast("long")
-        .alias("tf_b"),
-    )
-    w_term = Window.partitionBy("term")
-    with_df = tf.withColumn("df", F.count(F.lit(1)).over(w_term))
-
     len_t = F.least(F.col("__dl"), F.lit(title_len)).cast("double")
     stats = docs.select(
         F.regexp_count(F.col(text_col), F.lit(_DL_RE)).alias("__dl")
@@ -325,15 +402,6 @@ def bm25f_topk(
         F.sum(F.col("__dl") - F.least(F.col("__dl"), F.lit(title_len)))
         .cast("long")
         .alias("__tt_b"),
-    )
-    cand = with_df.crossJoin(F.broadcast(stats))
-
-    idf9 = F.round(
-        F.log(
-            ((F.col("__n") - F.col("df")) + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        ),
-        9,
     )
 
     def norm_tf(tf_col: str, flen, total_col: str, b_f: float, w_f: float):
@@ -348,26 +416,10 @@ def bm25f_topk(
     tfc = norm_tf("tf_t", len_t, "__tt_t", b_title, w_title) + norm_tf(
         "tf_b", F.col("__dl").cast("double") - len_t, "__tt_b", b_body, w_body
     )
-    sat = (tfc * F.lit(k1 + 1.0)) / (F.lit(float(k1)) + tfc)
-    contrib = cand.withColumn("__c", F.round(idf9 * sat, 9).cast("decimal(28,9)"))
-
-    qterms = spark.createDataFrame(qt, schema="qid string, term string")
-    per_doc = (
-        contrib.join(qterms, "term")
-        .groupBy("qid", id_col)
-        .agg(F.sum("__c").alias("__s"))
+    contrib = tf.crossJoin(F.broadcast(stats)).withColumn(
+        "__c", _contrib(_idf9(), _saturation(tfc, k1))
     )
-    w_rank = Window.partitionBy("qid").orderBy(F.col("__s").desc(), F.col(id_col))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "qid",
-            id_col,
-            "rank",
-            F.round(F.col("__s").cast("double"), 6).alias("score"),
-        )
-    )
+    return _ranked_scores(contrib.join(qterms, "term"), id_col, top_k)
 
 
 def bm25f_topk_sql(
@@ -392,11 +444,7 @@ def bm25f_topk_sql(
     (len_f*N)/total_f denominators with explicit DOUBLE casts and
     operand order, same zero-total CASE guards, same round-9/decimal
     accumulation and (score desc, id) ranking."""
-    qt = _query_terms(queries)
-    terms_list = ", ".join(f"'{t}'" for t in sorted({t for _, t in qt}))
-    qt_values = ", ".join(f"('{qid}', '{t}')" for qid, t in qt)
-    toks = f"list_filter(regexp_split_to_array({text_col}, '\\s+'), x -> x <> '')"
-    k1p1 = repr(k1 + 1.0)
+    toks = _sql_toks(text_col)
 
     def norm_sql(tf_col: str, flen: str, total: str, b_f: float, w_f: float) -> str:
         denom = (
@@ -416,10 +464,6 @@ def bm25f_topk_sql(
         + " + "
         + norm_sql("tf_b", len_b, "tt_b", float(b_body), float(w_body))
     )
-    sat = (
-        f"((({tfc}) * CAST({k1p1} AS DOUBLE)) "
-        f"/ (CAST({float(k1)!r} AS DOUBLE) + ({tfc})))"
-    )
     return f"""
     WITH stats AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -435,33 +479,14 @@ def bm25f_topk_sql(
                unnest({toks}) AS term,
                unnest(range(1, len({toks}) + 1)) AS pos
         FROM {table})
-      WHERE term IN ({terms_list})
+      WHERE term IN ({_query_terms_in_sql(queries)})
       GROUP BY {id_col}, dl, term),
-    wdf AS (
-      SELECT *, COUNT(*) OVER (PARTITION BY term) AS df FROM tf),
-    contrib AS (
-      SELECT qid, {id_col},
-             CAST(round(
-               round(ln(((CAST(n AS DOUBLE) - CAST(df AS DOUBLE)) + CAST(0.5 AS DOUBLE))
-                         / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                         + CAST(1.0 AS DOUBLE)), 9)
-               * {sat},
-               9) AS DECIMAL(28,9)) AS c
-      FROM wdf
-      JOIN (VALUES {qt_values}) AS q(qid, term) USING (term)
-      CROSS JOIN stats),
-    ranked AS (
-      SELECT qid, {id_col}, SUM(c) AS s,
-             CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY SUM(c) DESC, {id_col})
-                  AS BIGINT) AS rank
-      FROM contrib GROUP BY qid, {id_col})
-    SELECT qid, {id_col}, rank, round(CAST(s AS DOUBLE), 6) AS score
-    FROM ranked WHERE rank <= {top_k}
-    """
+    {_query_contrib_sql(queries, id_col, _saturation_sql(f"({tfc})", k1))},
+    {_ranked_tail_sql(id_col, top_k)}"""
 
 
 # --------------------------------------------------------------------------
-# Two-stage retrieve-then-rerank (r15)
+# Two-stage retrieve-then-rerank
 # --------------------------------------------------------------------------
 
 
@@ -474,7 +499,6 @@ def rerank_tfidf_topk(
     idf_scale: int = 1000,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_stats: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Two-stage ranked retrieval — the shape every production search/RAG
     stack runs: a CHEAP recall stage (BM25 top ``stage1_k`` per query,
@@ -499,9 +523,9 @@ def rerank_tfidf_topk(
     corpus-sized stage-2 aggregate is df-per-term (TF-IDF's
     definitional corpus statistic): one partial-aggregated
     (doc, term)-distinct pass, vocab-sized output, exactly the stats a
-    deployment maintains as a table next to ``corpus_stats``.
+    deployment maintains as a table.
 
-    Shared-subtree hygiene (r15 ADVICE): the two frames read from more
+    Shared-subtree hygiene: the frames read from more
     than one plan branch — the stage-1 candidate set (fed by bm25's two
     corpus passes; consumed by the prune AND the final score join) and
     the idf lattice (fed by the df-per-term pass; consumed by document
@@ -521,22 +545,12 @@ def rerank_tfidf_topk(
     from hadoop_gpu_spark.operators.fields import tokenize
     from hadoop_gpu_spark.utils import eager_persist
 
-    stats = None
-    if corpus_stats is None:
-        # 1-row (__n, __tt) corpus stats, persisted BEFORE stage 1 runs:
-        # the plan is byte-identical to the stats subtree bm25_topk
-        # builds internally, so Spark's cache manager substitutes the
-        # cached relation inside the stage-1 plan too — the corpus-stats
-        # scan runs ONCE per invocation instead of twice (stage 1 +
-        # stage 2's doc count), r16 optimization.
-        stats = eager_persist(
-            docs.agg(
-                F.count(F.lit(1)).cast("long").alias("__n"),
-                F.sum(F.regexp_count(F.col(text_col), F.lit(_DL_RE)))
-                .cast("long")
-                .alias("__tt"),
-            )
-        )
+    # 1-row (__n, __tt) corpus stats, persisted BEFORE stage 1 runs: the
+    # plan is the stats subtree bm25_topk builds internally
+    # (_corpus_counts), so Spark's cache manager substitutes the cached
+    # relation inside the stage-1 plan too — the corpus-stats scan runs
+    # ONCE per invocation instead of twice (stage 1 + stage 2's doc count).
+    stats = eager_persist(_corpus_counts(docs, text_col))
 
     cand = eager_persist(
         bm25_topk(
@@ -545,18 +559,12 @@ def rerank_tfidf_topk(
             top_k=stage1_k,
             id_col=id_col,
             text_col=text_col,
-            corpus_stats=corpus_stats,
         ).select("qid", id_col, F.col("rank").alias("bm25_rank"))
     )
 
-    qtf: dict[tuple[str, str], int] = {}
-    for qid, qtext in queries:
-        for t in qtext.split():
-            qtf[(qid, t)] = qtf.get((qid, t), 0) + 1
     spark = docs.sparkSession
     qterms = spark.createDataFrame(
-        [(q, t, c) for (q, t), c in sorted(qtf.items())],
-        schema="qid string, term string, tfq long",
+        _query_tf_counts(queries), schema="qid string, term string, tfq long"
     )
 
     # Candidate-document term frequencies, persisted (bounded by
@@ -576,8 +584,8 @@ def rerank_tfidf_topk(
     # weights/norms). Filter-before-aggregate is exact — df(t) counts the
     # docs containing t and dropping other terms' rows cannot change it —
     # and bounds the aggregate input by the candidate vocabulary's posting
-    # lists instead of the corpus' full (doc, term) pair count (r16
-    # optimization; guide §2.3). The vocab frame is bounded by
+    # lists instead of the corpus' full (doc, term) pair count (guide
+    # §2.3). The vocab frame is bounded by
     # |candidate docs| x terms-per-doc + |query terms|.
     vocab = ctf.select("term").union(qterms.select("term")).distinct()
     df_t = (
@@ -588,14 +596,9 @@ def rerank_tfidf_topk(
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
     )
-    if corpus_stats is None:
-        # The 1-row doc count rides the persisted (__n, __tt) stats
-        # aggregate shared with stage 1 (see above).
-        idf = df_t.crossJoin(F.broadcast(stats.select("__n")))
-    else:
-        idf = df_t.withColumn("__n", F.lit(int(corpus_stats[0])).cast("long"))
+    # The 1-row doc count rides the persisted stats shared with stage 1.
     idf = eager_persist(
-        idf.select(
+        df_t.crossJoin(F.broadcast(stats.select("__n"))).select(
             "term",
             F.round(
                 F.log(F.col("__n").cast("double") / F.col("df").cast("double"))
@@ -648,12 +651,9 @@ def rerank_tfidf_topk(
             ).otherwise(F.lit(0.0)),
         )
     )
-    w_rank = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= top_k)
-        .select("qid", id_col, "bm25_rank", "cosine", "rank")
-    )
+    return top_k_per_group(
+        scored, ["qid"], [F.col("cosine").desc(), F.col(id_col)], top_k
+    ).select("qid", id_col, "bm25_rank", "cosine", "rank")
 
 
 def morelikethis_topk(
@@ -666,7 +666,6 @@ def morelikethis_topk(
     top_k: int = 10,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_stats: tuple[int, int] | None = None,
     min_term_freq: int = 1,
     min_doc_freq: int = 1,
     max_doc_freq: int | None = None,
@@ -710,14 +709,12 @@ def morelikethis_topk(
     ``min_doc_freq`` drops hapax noise, ``max_doc_freq`` bounds the
     worst-case candidate fanout at ``max_query_terms * max_doc_freq``
     rows per seed — a HARD cap a deployment can size memory against.
-    The defaults (1, 1, None) are exact no-ops: the default plan and
-    the SQL twin's default text are byte-identical to the pre-knob
-    operator, so the registered q_morelikethis pin is untouched.
+    The defaults (1, 1, None) select every seed term (each has tf >= 1
+    and df >= 1).
     """
     from hadoop_gpu_spark.operators.fields import tokenize
     from hadoop_gpu_spark.utils import eager_persist
 
-    spark = docs.sparkSession
     # Corpus token stream, tokenizer evaluated once per document (see
     # _doc_token_stream — the old regexp_count-next-to-explode form paid
     # the full-text regex per token row, ~10x this operator's corpus-pass
@@ -751,63 +748,32 @@ def morelikethis_topk(
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("long").alias("df"))
     )
-    if corpus_stats is None:
-        # 1-row corpus stats, persisted so the (N, total-tokens) scan
-        # runs once — previously this subtree was planned twice (idf
-        # lattice build + the runtime scoring crossJoin), costing a
-        # second full-corpus regexp_count pass every invocation.
-        stats = eager_persist(
-            docs.agg(
-                F.count(F.lit(1)).cast("long").alias("__n"),
-                F.sum(F.regexp_count(F.col(text_col), F.lit(_DL_RE)))
-                .cast("long")
-                .alias("__tt"),
-            )
-        )
-        idf_src = df_t.crossJoin(F.broadcast(stats))
-        stats_b = F.broadcast(stats)
-    else:
-        n_docs, total_tokens = corpus_stats
-        idf_src = df_t.withColumn("__n", F.lit(int(n_docs)).cast("long")).withColumn(
-            "__tt", F.lit(int(total_tokens)).cast("long")
-        )
-        stats_b = F.broadcast(
-            spark.createDataFrame(
-                [(int(n_docs), int(total_tokens))], "__n long, __tt long"
-            )
-        )
-    idf9_expr = F.round(
-        F.log(
-            ((F.col("__n") - F.col("df")) + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            + F.lit(1.0)
-        ),
-        9,
+    # 1-row corpus stats, persisted so the (N, total-tokens) scan runs
+    # once for the idf lattice build and the runtime scoring crossJoin.
+    stats = eager_persist(_corpus_counts(docs, text_col))
+    # The persisted idf lattice (seed-vocab-sized) carries df for the
+    # doc-frequency knobs.
+    idf = eager_persist(
+        df_t.crossJoin(F.broadcast(stats)).select("term", "df", _idf9().alias("idf9"))
     )
-    knobs = min_term_freq > 1 or min_doc_freq > 1 or max_doc_freq is not None
-    # With knobs active the persisted idf lattice carries df too (still
-    # seed-vocab-sized, no extra corpus pass).
-    idf_key_cols = ["term", "df"] if knobs else ["term"]
-    idf = eager_persist(idf_src.select(*idf_key_cols, idf9_expr.alias("idf9")))
 
-    # Seed term selection: rank the seed's own terms by tf·idf9 (idf
-    # covers every seed term by construction of the vocab filter above).
-    w_sel = Window.partitionBy(id_col).orderBy(
-        (F.col("tfq") * F.col("idf9")).desc(), F.col("term").asc()
+    # Seed term selection: rank the seed's own eligible terms by tf·idf9
+    # (idf covers every seed term by construction of the vocab filter).
+    sel_src = seed_tf.join(idf, "term").filter(
+        (F.col("tfq") >= min_term_freq) & (F.col("df") >= min_doc_freq)
     )
-    sel_src = seed_tf.join(idf, "term")
-    if min_term_freq > 1:
-        sel_src = sel_src.filter(F.col("tfq") >= min_term_freq)
-    if min_doc_freq > 1:
-        sel_src = sel_src.filter(F.col("df") >= min_doc_freq)
     if max_doc_freq is not None:
         sel_src = sel_src.filter(F.col("df") <= max_doc_freq)
     qsel = eager_persist(
-        sel_src.withColumn("__r", F.row_number().over(w_sel))
-        .filter(F.col("__r") <= max_query_terms)
-        .select(F.col(id_col).alias("qid"), "term")
+        top_k_per_group(
+            sel_src,
+            [id_col],
+            [(F.col("tfq") * F.col("idf9")).desc(), F.col("term").asc()],
+            max_query_terms,
+        ).select(F.col(id_col).alias("qid"), "term")
     )
 
-    # Candidate match + BM25 scoring (bm25_topk's contrib lattice). The
+    # Candidate match + BM25 scoring (bm25_topk's lattice). The
     # broadcast qsel join lands BELOW the tf aggregate: only occurrences
     # of the <= n_seeds x max_query_terms selected terms enter the
     # groupBy (tf per (qid, doc, term) is the term's full in-doc count
@@ -820,29 +786,12 @@ def morelikethis_topk(
         .groupBy("qid", id_col, "__dl", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .join(idf, "term")
-        .crossJoin(stats_b)
-    )
-    dl_over_avgdl = (
-        F.col("__dl").cast("double") * F.col("__n").cast("double")
-    ) / F.col("__tt").cast("double")
-    ratio = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl_over_avgdl)
+        .crossJoin(F.broadcast(stats))
     )
     contrib = cand.withColumn(
-        "__c", F.round(F.col("idf9") * ratio, 9).cast("decimal(28,9)")
+        "__c", _contrib(F.col("idf9"), _saturation(F.col("tf"), k1, _length_norm(b)))
     )
-    per_doc = contrib.groupBy("qid", id_col).agg(F.sum("__c").alias("__s"))
-    w_rank = Window.partitionBy("qid").orderBy(F.col("__s").desc(), F.col(id_col))
-    return (
-        per_doc.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "qid",
-            id_col,
-            "rank",
-            F.round(F.col("__s").cast("double"), 6).alias("score"),
-        )
-    )
+    return _ranked_scores(contrib, id_col, top_k)
 
 
 def morelikethis_sql(
@@ -861,28 +810,15 @@ def morelikethis_sql(
 ) -> str:
     """DuckDB twin of :func:`morelikethis_topk` — identical lattice:
     same tokenizer spelling, same plus-one idf round-9 discipline, same
-    tf·idf9 seed-term ranking with term ties, same decimal contrib
-    accumulation and (score desc, id) ranking. The term-selection knobs
-    render as an extra dft join + WHERE inside the qsel CTE ONLY when
-    non-default, so the default twin's text is byte-identical to the
-    pre-knob generator (the registered q_morelikethis oracle pin)."""
-    toks = f"list_filter(regexp_split_to_array({text_col}, '\\s+'), x -> x <> '')"
-    k1p1 = repr(k1 + 1.0)
-    one_m_b = repr(1.0 - b)
-    conds = []
-    if min_term_freq > 1:
-        conds.append(f"s.tfq >= {min_term_freq}")
-    if min_doc_freq > 1:
-        conds.append(f"d.df >= {min_doc_freq}")
+    eligibility filters and tf·idf9 seed-term ranking with term ties,
+    same decimal contrib accumulation and (score desc, id) ranking."""
+    toks = _sql_toks(text_col)
+    eligible = f"s.tfq >= {min_term_freq} AND d.df >= {min_doc_freq}"
     if max_doc_freq is not None:
-        conds.append(f"d.df <= {max_doc_freq}")
-    knob_join = " JOIN dft d USING (term)" if conds else ""
-    knob_where = (" WHERE " + " AND ".join(conds)) if conds else ""
+        eligible += f" AND d.df <= {max_doc_freq}"
+    sat = _saturation_sql("CAST(p.tf AS DOUBLE)", k1, _length_norm_sql(b, "p.dl"))
     return f"""
-    WITH stats AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(len({toks})) AS BIGINT) AS tt
-      FROM {table}),
+    WITH {_stats_sql(table, text_col)},
     pairs AS (
       SELECT {id_col}, dl, term, CAST(COUNT(*) AS BIGINT) AS tf
       FROM (
@@ -891,10 +827,7 @@ def morelikethis_sql(
       GROUP BY {id_col}, dl, term),
     dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM pairs GROUP BY term),
     idf AS (
-      SELECT term,
-             round(ln(((CAST(n AS DOUBLE) - CAST(df AS DOUBLE)) + CAST(0.5 AS DOUBLE))
-                      / (CAST(df AS DOUBLE) + CAST(0.5 AS DOUBLE))
-                      + CAST(1.0 AS DOUBLE)), 9) AS idf9
+      SELECT term, {_IDF9_SQL} AS idf9
       FROM dft CROSS JOIN stats),
     seed_tf AS (
       SELECT {id_col}, term, CAST(COUNT(*) AS BIGINT) AS tfq
@@ -906,30 +839,17 @@ def morelikethis_sql(
         SELECT s.{id_col} AS qid, s.term,
                ROW_NUMBER() OVER (PARTITION BY s.{id_col}
                    ORDER BY CAST(s.tfq AS DOUBLE) * i.idf9 DESC, s.term ASC) AS r
-        FROM seed_tf s JOIN idf i USING (term){knob_join}{knob_where})
+        FROM seed_tf s JOIN idf i USING (term) JOIN dft d USING (term)
+        WHERE {eligible})
       WHERE r <= {max_query_terms}),
     contrib AS (
-      SELECT q.qid, p.{id_col},
-             CAST(round(
-               i.idf9
-               * ((CAST(p.tf AS DOUBLE) * CAST({k1p1} AS DOUBLE))
-                  / (CAST(p.tf AS DOUBLE) + CAST({repr(float(k1))} AS DOUBLE)
-                     * (CAST({one_m_b} AS DOUBLE) + CAST({repr(float(b))} AS DOUBLE)
-                        * ((CAST(p.dl AS DOUBLE) * CAST(n AS DOUBLE)) / CAST(tt AS DOUBLE))))),
-               9) AS DECIMAL(28,9)) AS c
+      SELECT q.qid, p.{id_col}, {_contrib_sql("i.idf9", sat)} AS c
       FROM pairs p
       JOIN qsel q USING (term)
       JOIN idf i USING (term)
       CROSS JOIN stats
       WHERE p.{id_col} <> q.qid),
-    ranked AS (
-      SELECT qid, {id_col}, SUM(c) AS s,
-             CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY SUM(c) DESC, {id_col})
-                  AS BIGINT) AS rank
-      FROM contrib GROUP BY qid, {id_col})
-    SELECT qid, {id_col}, rank, round(CAST(s AS DOUBLE), 6) AS score
-    FROM ranked WHERE rank <= {top_k}
-    """
+    {_ranked_tail_sql(id_col, top_k)}"""
 
 
 def rrf_fuse(
@@ -975,23 +895,20 @@ def rrf_fuse(
         for nm in names
     ]
     score = _reduce(lambda a, b: a + b, terms)
-    w = Window.partitionBy("qid").orderBy(F.col("__rrf").desc(), F.col("nid").asc())
-    return (
-        joined.withColumn("__rrf", score)
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= top_k)
-        .select(
-            "qid",
-            "nid",
-            *[
-                F.coalesce(F.col(f"rank_{nm}"), F.lit(0).cast("long")).alias(
-                    f"rank_{nm}"
-                )
-                for nm in names
-            ],
-            F.round(F.col("__rrf"), 9).alias("rrf"),
-            "rank",
-        )
+    return top_k_per_group(
+        joined.withColumn("__rrf", score),
+        ["qid"],
+        [F.col("__rrf").desc(), F.col("nid").asc()],
+        top_k,
+    ).select(
+        "qid",
+        "nid",
+        *[
+            F.coalesce(F.col(f"rank_{nm}"), F.lit(0).cast("long")).alias(f"rank_{nm}")
+            for nm in names
+        ],
+        F.round(F.col("__rrf"), 9).alias("rrf"),
+        "rank",
     )
 
 
@@ -1065,14 +982,10 @@ def rerank_tfidf_topk_sql(
     stage1 = bm25_topk_sql(
         table, queries, top_k=stage1_k, id_col=id_col, text_col=text_col
     )
-    qtf: dict[tuple[str, str], int] = {}
-    for qid, qtext in queries:
-        for t in qtext.split():
-            qtf[(qid, t)] = qtf.get((qid, t), 0) + 1
     q_values = ", ".join(
-        f"('{q}', '{t}', CAST({c} AS BIGINT))" for (q, t), c in sorted(qtf.items())
+        f"('{q}', '{t}', CAST({c} AS BIGINT))" for q, t, c in _query_tf_counts(queries)
     )
-    toks = f"list_filter(regexp_split_to_array({text_col}, '\\s+'), x -> x <> '')"
+    toks = _sql_toks(text_col)
     return f"""
     WITH cand AS (
       SELECT qid, {id_col}, rank AS bm25_rank FROM ({stage1})),

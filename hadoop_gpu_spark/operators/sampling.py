@@ -2,8 +2,9 @@
 
 Reference: SequenceFileInputFilter (SURVEY.md §2.1) — keep records whose key
 matches a regex (``M/SequenceFileInputFilter.java:103``), hashes into a
-1-in-f sample (PercentFilter, ``:146``), or MD5-buckets into 1-in-f
-(MD5Filter, ``:195``); plus InputSampler's split/random/interval samplers
+1-in-f sample (PercentFilter, ``:146`` — ``md5_sample`` with another seed:
+any uniform deterministic hash meets its contract), or MD5-buckets into
+1-in-f (MD5Filter, ``:195``); plus InputSampler's split/random/interval samplers
 (``M/lib/InputSampler.java:49,162,251``).
 
 All deterministic (md5-based, engine-portable) so results are reproducible
@@ -29,15 +30,6 @@ def md5_sample(df: DataFrame, key_col: str, frequency: int, seed: int = 0) -> Da
     """MD5Filter — keep keys whose md5 bucket is 0 mod frequency.
 
     Reference: M/SequenceFileInputFilter.java:195 (MD5(key) % f == 0).
-    """
-    return df.filter(bucket(key_col, frequency, seed) == 0)
-
-
-def percent_sample(df: DataFrame, key_col: str, frequency: int, seed: int = 1) -> DataFrame:
-    """PercentFilter — hashcode % f == 0 (M/SequenceFileInputFilter.java:146).
-
-    Same contract as md5_sample with a different hash seed (the reference
-    uses Java hashCode; any uniform deterministic hash satisfies the spec).
     """
     return df.filter(bucket(key_col, frequency, seed) == 0)
 

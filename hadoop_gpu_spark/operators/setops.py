@@ -3,7 +3,9 @@
 Reference (SURVEY.md §2.7): union = MultipleInputs/DelegatingInputFormat
 (``M/lib/MultipleInputs.java:34``); priority-union = override join;
 distinct = identity-reduce idiom; intersect/except not shipped (expressible
-in user code) — first-class here, beyond-reference.
+in user code). Distinct, intersect and except are the DataFrame methods
+themselves (``distinct``/``intersect[All]``/``exceptAll``); this module
+keeps only the compositions the DataFrame API lacks.
 """
 
 from __future__ import annotations
@@ -16,18 +18,6 @@ from pyspark.sql import DataFrame
 def union_all(sources: list[DataFrame]) -> DataFrame:
     """Multi-path input union, schema-aligned by name."""
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=False), sources)
-
-
-def distinct(df: DataFrame) -> DataFrame:
-    return df.distinct()
-
-
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersectAll(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
 
 
 def multi_input_union(sources) -> DataFrame:

@@ -67,9 +67,22 @@ def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
 def top_k_per_group(
     df: DataFrame, group_cols: list[str], order_cols: list[Column], k: int
 ) -> DataFrame:
-    """Per-group top-k via row_number window (single shuffle on group key)."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= k).drop("__rn")
+    """Per-group top-k: the first ``k`` rows of each group under the
+    caller's order, each with its 1-based BIGINT position in ``rank``.
+
+    Every ranking operator (BM25 family, RRF, brute/IVF/LSH ANN, PQ and
+    IVF-PQ, IVF probe selection) ranks through it, so bound pruning has
+    one place to land. The reference idiom is sort then head
+    (X/Grep.java:71-82); here one shuffle on the group key feeds a
+    row_number window, and Spark plans a partial window group limit
+    before that shuffle, so at most k rows per group and map task cross
+    it. End ``order_cols`` with a unique key: ties then break
+    deterministically and the ranks match the SQL twins'
+    ``ROW_NUMBER() ... <= k``. Callers that only select rows drop
+    ``rank``.
+    """
+    ranked = ranked_within_group(df, group_cols, order_cols, "rank")
+    return ranked.withColumn("rank", F.col("rank").cast("long")).filter(F.col("rank") <= k)
 
 
 _KEYFIELD_RE = re.compile(r"^-k(\d+)(?:\.(\d+))?(?:,(\d+)(?:\.(\d+))?)?([nr]*)$")

@@ -496,8 +496,6 @@ def q_uniq_value_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hadoop_gpu_spark.operators.setops import distinct
-
     customer = T(spark, sf_dir, "customer")
     orders = T(spark, sf_dir, "orders")
     a = customer.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")

@@ -19,9 +19,9 @@ import pandas as pd  # module-level: pandas_udf type hints resolve against modul
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from hadoop_gpu_spark.functions.vectors import dot, euclidean_sq, norm_sq
+from hadoop_gpu_spark.operators.sort import top_k_per_group
 
 
 def brute_force_topk(
@@ -66,11 +66,7 @@ def brute_force_topk(
     else:
         raise ValueError(metric)
     scored = pairs.select("qid", "nid", score.alias("score"))
-    w = Window.partitionBy("qid").orderBy(*order)
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return top_k_per_group(scored, ["qid"], order, k)
 
 
 def assign_to_centroids(
@@ -192,10 +188,9 @@ def ivf_topk(
         norm_sq(vec_col).alias("__qn"),
     )
     qc = q.crossJoin(F.broadcast(cen))
-    w = Window.partitionBy("qid").orderBy(
-        euclidean_sq("__qv", "__mv").asc(), F.col("centroid_id").asc()
+    probes = top_k_per_group(
+        qc, ["qid"], [euclidean_sq("__qv", "__mv").asc(), F.col("centroid_id").asc()], nprobe
     )
-    probes = qc.withColumn("__r", F.row_number().over(w)).filter(F.col("__r") <= nprobe)
     probe_q = probes.select("qid", "__qv", "__qn", "centroid_id")
     # per-side norm factoring, same bit-identity argument as
     # brute_force_topk (the probed-cell candidate set pays one dot per
@@ -211,8 +206,7 @@ def ivf_topk(
         "nid",
         (dot("__qv", "__cv") / F.sqrt(F.col("__qn") * F.col("__cn"))).alias("score"),
     )
-    w2 = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
-    return scored.withColumn("rank", F.row_number().over(w2)).filter(F.col("rank") <= k)
+    return top_k_per_group(scored, ["qid"], [F.col("score").desc(), F.col("nid").asc()], k)
 
 
 def lsh_signs(n_bits: int, dim: int) -> list[list[int]]:
@@ -279,37 +273,22 @@ def _signatures_np(vecs, signs: list[list[int]]):
     return ((quant @ mat > 0) @ weights).astype(np.int64)
 
 
-def lsh_signature_pandas(vec_col, signs: list[list[int]]):
-    """Arrow-batched numpy twin of :func:`lsh_signature` — bit-identical
-    by construction: quantization is floor(float→double * 1e6) in IEEE
-    doubles either way, and every dot product is exact integer arithmetic
-    (values far below 2^53), so accumulation order — numpy pairwise vs the
-    HOF's left fold — cannot flip a bit. Pinned by
-    tests/test_operators.py::test_lsh_signature_pandas_matches_expression.
-
-    Motivation: the interpreted-HOF formulation costs ~0.7 ms/row (5
-    hyperplanes x zip_with+aggregate over 64 elements, no codegen); the
-    numpy path is one matmul per batch.
-    """
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def _udf(vecs: pd.Series) -> pd.Series:
-        return pd.Series(_signatures_np(vecs, signs))
-
-    vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return _udf(vec)
-
-
 def lsh_signature_pandas_auto(vec_col, n_bits: int):
-    """:func:`lsh_signature_pandas` without the driver-side dimension
-    probe: ``lsh_signs`` is a pure function of (n_bits, dim), so each
-    executor derives the IDENTICAL sign matrix lazily from its first
-    batch's vector length (memoized per dim for the worker lifetime).
-    Removes the one-row ``first()`` job a probe-based caller pays per
-    invocation — at cluster scale that probe is a full scan-stage launch
-    just to read one array length."""
+    """Arrow-batched numpy twin of :func:`lsh_signature` over
+    ``lsh_signs(n_bits, dim)`` — bit-identical by construction:
+    quantization is floor(float→double * 1e6) in IEEE doubles either way,
+    and every dot product is exact integer arithmetic (values far below
+    2^53), so accumulation order — numpy pairwise vs the HOF's left fold —
+    cannot flip a bit. Pinned by
+    tests/test_operators.py::test_lsh_signature_pandas_matches_expression.
+    The interpreted-HOF form costs ~0.7 ms/row (5 hyperplanes x
+    zip_with+aggregate over 64 elements, no codegen); this is one matmul
+    per batch.
+
+    No driver-side dimension probe: ``lsh_signs`` is a pure function of
+    (n_bits, dim), so each executor derives the IDENTICAL sign matrix
+    lazily from its first batch's vector length (memoized per dim for the
+    worker lifetime) — no one-row ``first()`` job per invocation."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
@@ -404,5 +383,4 @@ def lsh_bucket_topk(
         "nid",
         (dot("__qv", "__cv") / F.sqrt(F.col("__qn") * F.col("__cn"))).alias("score"),
     )
-    w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("nid").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return top_k_per_group(scored, ["qid"], [F.col("score").desc(), F.col("nid").asc()], k)

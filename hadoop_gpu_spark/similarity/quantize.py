@@ -39,6 +39,8 @@ import pandas as pd  # module-level: pandas_udf type hints resolve against modul
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hadoop_gpu_spark.operators.sort import top_k_per_group
+
 # --------------------------------------------------------------------------
 # int8 scalar quantization
 # --------------------------------------------------------------------------
@@ -150,6 +152,62 @@ def _argmin(dists: list[Column]) -> Column:
     return out.otherwise(expr)
 
 
+def _subspace_dists(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """(N, S, K) squared L2 distance from row n's subvector s to centroid k
+    of subspace s — the one numpy PQ distance kernel. Squared diffs
+    accumulate LEFT-TO-RIGHT along the subvector (never ``np.sum``, whose
+    pairwise association would drift from the expression and SQL twins'
+    bit pattern). PQ codes are its first-occurrence argmin over K (the
+    CASE chain's lowest-index tie rule); an ADC lookup table is its one
+    row for a query vector. Every op is per-element, so a row's values do
+    not depend on the batch it rides in."""
+    n_sub, n_cent, sub_dim = C.shape
+    out = np.empty((X.shape[0], n_sub, n_cent))
+    for s in range(n_sub):
+        sq = X[:, None, s * sub_dim : (s + 1) * sub_dim] - C[s][None, :, :]
+        sq *= sq
+        acc = out[:, s, :]
+        acc[...] = sq[:, :, 0]
+        for d in range(1, sub_dim):
+            acc += sq[:, :, d]
+    return out
+
+
+def _lut(x, C: np.ndarray) -> list[list[float]]:
+    """One query's ADC lookup table: ``lut[s][k]`` = squared distance from
+    its subvector s to centroid k (the :func:`_subspace_dists` kernel)."""
+    return _subspace_dists(np.asarray(x, dtype=np.float64)[None, :], C)[0].tolist()
+
+
+def _query_lut_frame(
+    df: DataFrame, id_col: str, col: str, n_queries: int, C: np.ndarray
+) -> DataFrame:
+    """(qid, lut) for the first ``n_queries`` vectors — each query's
+    subspace-distance table, computed driver-side (tiny model:
+    n_queries x n_sub x n_cent doubles) and broadcast by the caller."""
+    qrows = df.filter(F.col(id_col) < n_queries).select(id_col, col).collect()
+    return df.sparkSession.createDataFrame(
+        [(int(r[id_col]), _lut(r[col], C)) for r in qrows],
+        "qid long, lut array<array<double>>",
+    )
+
+
+def _adc_topk(cand: DataFrame, n_sub: int, k: int) -> DataFrame:
+    """(qid, nid, adc, rank): the ADC lookup-and-rank tail shared by the PQ
+    searches. ``cand`` carries (qid, nid, lut, c0..c{n_sub-1}); a
+    candidate's distance is the left-to-right sum over subspaces of its
+    code's LUT entry (the SQL twins' CASE lookups, same order), and the
+    ``k`` nearest per query rank with ties on the lower nid."""
+    terms = [
+        F.expr(f"element_at(element_at(lut, {s + 1}), cast(c{s} as int) + 1)")
+        for s in range(n_sub)
+    ]
+    scored = cand.select("qid", "nid", reduce(lambda a, b: a + b, terms).alias("adc"))
+    return top_k_per_group(
+        scored, ["qid"], [F.col("adc").asc(), F.col("nid").asc()], k
+    ).select("qid", "nid", F.round("adc", 9).alias("adc"), "rank")
+
+
 def pq_encode_expr(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -184,19 +242,16 @@ def pq_encode(
     book: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """Production PQ encode: one Arrow-batched numpy kernel per executor
-    core — (N, K, D) broadcasted squared diffs accumulated LEFT-TO-RIGHT
-    along D (never ``np.sum``, whose pairwise association would drift
-    from the SQL twin's bit pattern), then first-occurrence argmin (the
-    same lowest-index tie rule as the CASE chain). Map-only, codebook in
-    the closure (a broadcast at scale), no keyed shuffle — only the
-    ensure_min_partitions round-robin spread every Python-kernel entry
-    point applies (a no-op on real many-row-group inputs)."""
+    core — the :func:`_subspace_dists` kernel, then first-occurrence
+    argmin (the same lowest-index tie rule as the CASE chain). Map-only,
+    codebook in the closure (a broadcast at scale), no keyed shuffle —
+    only the ensure_min_partitions round-robin spread every Python-kernel
+    entry point applies (a no-op on real many-row-group inputs)."""
     from hadoop_gpu_spark.utils import ensure_min_partitions
 
     df = ensure_min_partitions(df)
     book_v = book if book is not None else pq_codebook()
     n_sub = len(book_v)
-    sub_dim = len(book_v[0][0])
     C = np.asarray(book_v, dtype=np.float64)  # (S, K, D)
 
     @F.pandas_udf("array<long>")
@@ -204,16 +259,7 @@ def pq_encode(
         if not len(embs):
             return pd.Series([], dtype=object)
         X = np.asarray(embs.tolist(), dtype=np.float64)  # float32 -> exact
-        out = np.empty((X.shape[0], n_sub), dtype=np.int64)
-        for s in range(n_sub):
-            xs = X[:, s * sub_dim : (s + 1) * sub_dim]
-            sq = xs[:, None, :] - C[s][None, :, :]
-            sq *= sq
-            acc = sq[:, :, 0].copy()
-            for d in range(1, sub_dim):
-                acc += sq[:, :, d]
-            out[:, s] = acc.argmin(axis=1)
-        return pd.Series(list(out))
+        return pd.Series(list(_subspace_dists(X, C).argmin(axis=2).astype(np.int64)))
 
     arr = pq_codes(F.col(col))
     out = df.select(F.col(id_col), arr.alias("__pq"))
@@ -245,46 +291,11 @@ def pq_adc_topk(
     the same left-to-right accumulation as the encode kernel, so the SQL
     twin (``pq_adc_sql``) matches bit-for-bit.
     """
-    spark = df.sparkSession
     book_v = book if book is not None else pq_codebook()
-    n_sub = len(book_v)
-    sub_dim = len(book_v[0][0])
-    C = np.asarray(book_v, dtype=np.float64)
-
     codes = pq_encode(df, id_col, col, book_v).drop("pq_code")
-    qrows = (
-        df.filter(F.col(id_col) < n_queries).select(id_col, col).collect()
-    )
-    lut_rows = []
-    for r in qrows:
-        x = np.asarray(r[col], dtype=np.float64)
-        per_s = []
-        for s in range(n_sub):
-            xs = x[s * sub_dim : (s + 1) * sub_dim]
-            sq = xs[None, :] - C[s]
-            sq *= sq
-            acc = sq[:, 0].copy()
-            for d in range(1, sub_dim):
-                acc += sq[:, d]
-            per_s.append([float(v) for v in acc])
-        lut_rows.append((int(r[id_col]), per_s))
-    lut_df = spark.createDataFrame(lut_rows, "qid long, lut array<array<double>>")
-
+    lut_df = _query_lut_frame(df, id_col, col, n_queries, np.asarray(book_v, dtype=np.float64))
     j = codes.crossJoin(F.broadcast(lut_df)).filter(F.col(id_col) != F.col("qid"))
-    terms = [
-        F.expr(f"element_at(element_at(lut, {s + 1}), cast(c{s} as int) + 1)")
-        for s in range(n_sub)
-    ]
-    adc = reduce(lambda a, b: a + b, terms)
-    scored = j.select("qid", F.col(id_col).alias("nid"), adc.alias("adc"))
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", F.round("adc", 9).alias("adc"), "rank")
-    )
+    return _adc_topk(j.withColumnRenamed(id_col, "nid"), len(book_v), k)
 
 
 # --------------------------------------------------------------------------
@@ -330,6 +341,40 @@ def _pq_sql_parts(
     return dist_cols, mins, cases
 
 
+def _adc_sql(book: list[list[list[float]]]) -> str:
+    """ADC score of corpus codes ``e.c{s}`` against LUT row ``q``: the
+    left-to-right sum over subspaces of a CASE lookup of the code's
+    ``q.d{s}_{k}`` entry — the SQL half of :func:`_adc_topk`."""
+    return " + ".join(
+        f"(CASE e.c{s} "
+        + " ".join(f"WHEN {kk} THEN q.d{s}_{kk}" for kk in range(len(cents)))
+        + " END)"
+        for s, cents in enumerate(book)
+    )
+
+
+def _ranked_sql(col: str, k: int) -> str:
+    """The ``ranked`` CTE over ``scored(qid, nid, col)`` plus the final
+    SELECT: the ``k`` smallest per query, ties on the lower nid, ``col``
+    reported round-9 — the SQL half of ``top_k_per_group``."""
+    return f"""ranked AS (
+      SELECT qid, nid, {col},
+             ROW_NUMBER() OVER (PARTITION BY qid
+                                ORDER BY {col} ASC, nid ASC) AS rank
+      FROM scored)
+    SELECT qid, nid, round({col}, 9) AS {col}, rank FROM ranked WHERE rank <= {k}
+    """
+
+
+def _eucl_sql(a: str, b: str) -> str:
+    """Squared L2 of two float arrays as DuckDB's sequential list_sum
+    fold — bit-equal to ``euclidean_sq``'s left fold."""
+    return (
+        f"list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]), "
+        "p -> (p[1]-p[2])*(p[1]-p[2])))"
+    )
+
+
 def pq_encode_sql(book: list[list[list[float]]], table: str = "embeddings") -> str:
     """Generate the DuckDB twin of ``pq_encode`` (1-based list indexing,
     same left-to-right float expression trees, same CASE tie rule)."""
@@ -357,15 +402,8 @@ def pq_adc_sql(
     entry), corpus codes come from the same argmin CASE chain, and the
     ADC score is the left-to-right sum over subspaces of a
     CASE-code-lookup into the query's LUT row."""
-    n_sub = len(book)
     dist_cols, mins, cases = _pq_sql_parts(book)
-    adc_terms = []
-    for s in range(n_sub):
-        whens = " ".join(
-            f"WHEN {kk} THEN q.d{s}_{kk}" for kk in range(len(book[s]))
-        )
-        adc_terms.append(f"(CASE e.c{s} {whens} END)")
-    adc = " + ".join(adc_terms)
+    adc = _adc_sql(book)
     return f"""
     WITH dists AS (SELECT vec_id, {', '.join(dist_cols)} FROM {table}),
     mins AS (SELECT *, {', '.join(mins)} FROM dists),
@@ -374,13 +412,7 @@ def pq_adc_sql(
     scored AS (
       SELECT q.vec_id AS qid, e.vec_id AS nid, {adc} AS adc
       FROM codes e, lut q WHERE e.vec_id <> q.vec_id),
-    ranked AS (
-      SELECT qid, nid, adc,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY adc ASC, nid ASC) AS rank
-      FROM scored)
-    SELECT qid, nid, round(adc, 9) AS adc, rank FROM ranked WHERE rank <= {k}
-    """
+    {_ranked_sql("adc", k)}"""
 
 
 SQ8_SQL = """
@@ -557,16 +589,11 @@ def pq_train(
         )
     rows = rows.localCheckpoint(eager=True)
     try:
-        from pyspark.sql.window import Window
-
         # deterministic init: md5-ordered distinct subvectors
         dv = rows.select("sub", *d_cols).distinct()
         h = F.md5(F.encode(F.concat_ws(",", *[F.col(c).cast("string") for c in d_cols]), "UTF-8"))
-        w = Window.partitionBy("sub").orderBy(h, *[F.col(c) for c in d_cols])
-        ini = (
-            dv.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= n_cent)
-            .select("sub", (F.col("rn") - 1).cast("long").alias("cluster"), *d_cols)
+        ini = top_k_per_group(dv, ["sub"], [h, *[F.col(c) for c in d_cols]], n_cent).select(
+            "sub", (F.col("rank") - 1).alias("cluster"), *d_cols
         )
         book = [
             (int(r["sub"]), int(r["cluster"]), *[int(r[c]) for c in d_cols])
@@ -706,8 +733,6 @@ def _fused_assign_encode(
     cid: "np.ndarray",
     M: "np.ndarray",
     C: "np.ndarray",
-    n_sub: int,
-    sub_dim: int,
     residual: bool,
 ) -> DataFrame:
     """(nid, centroid_id, c0..c{n_sub-1}) — coarse assignment AND PQ
@@ -721,16 +746,17 @@ def _fused_assign_encode(
 
     Bit-identity: the assignment block is assign_to_centroids_pandas's
     kernel verbatim (per-dimension sequential accumulate, first-min
-    argmin over centroids sorted by id); the codes block is the
-    pq_encode/_res_codes kernel verbatim (per-subspace broadcasted
-    squared diffs, left-to-right accumulate, first-min argmin), applied
-    to x (or x - c(x) when ``residual`` — the float64 subtract the old
-    _res_codes did). Composing the two kernels in one function body
-    changes no operation and no operand, and every op is per-row
-    independent (batch boundaries cannot affect values), so the output
-    is bit-identical to the chained form.
+    argmin over centroids sorted by id); the codes block is pq_encode's
+    :func:`_subspace_dists` kernel and first-min argmin, applied to x (or
+    to the float64 residual x - c(x) when ``residual``). Composing the
+    two kernels in one function body changes no operation and no
+    operand, and every op is per-row independent (batch boundaries
+    cannot affect values), so the output is bit-identical to the chained
+    form.
     """
     from hadoop_gpu_spark.utils import ensure_min_partitions
+
+    n_sub = C.shape[0]
 
     def _assign_codes(batches):
         for pdf in batches:
@@ -743,15 +769,7 @@ def _fused_assign_encode(
                 acc += diff * diff
             rows = np.argmin(acc, axis=1)
             R = X - M[rows] if residual else X
-            out = np.empty((R.shape[0], n_sub), dtype=np.int64)
-            for s in range(n_sub):
-                xs = R[:, s * sub_dim : (s + 1) * sub_dim]
-                sq = xs[:, None, :] - C[s][None, :, :]
-                sq *= sq
-                a = sq[:, :, 0].copy()
-                for d in range(1, sub_dim):
-                    a += sq[:, :, d]
-                out[:, s] = a.argmin(axis=1)
+            out = _subspace_dists(R, C).argmin(axis=2)
             cols = {"nid": pdf[id_col].to_numpy(), "centroid_id": cid[rows]}
             for s in range(n_sub):
                 cols[f"c{s}"] = out[:, s]
@@ -800,14 +818,10 @@ def ivfpq_topk(
     partitioned by centroid_id so a probe is partition pruning
     (the MapFileOutputFormat lesson, SURVEY.md §1.4).
     """
-    from pyspark.sql.window import Window
-
     from hadoop_gpu_spark.functions.vectors import euclidean_sq
 
-    spark = df.sparkSession
     book_v = book if book is not None else pq_codebook()
     n_sub = len(book_v)
-    sub_dim = len(book_v[0][0])
     C = np.asarray(book_v, dtype=np.float64)  # (S, K, D)
 
     cen = df.filter(F.col(id_col) < n_centroids).select(
@@ -816,14 +830,12 @@ def ivfpq_topk(
     # Coarse model driver-side once (metadata-sized): feeds the fused
     # assign+encode kernel — previously assign_to_centroids_pandas
     # collected it separately AND the corpus crossed the Python
-    # boundary a second time for the codes UDF (see _fused_assign_pq_udf
+    # boundary a second time for the codes UDF (see _fused_assign_encode
     # for the bit-identity argument).
     cen_rows = sorted(cen.collect(), key=lambda r: r["centroid_id"])
     cid_v = np.array([int(r["centroid_id"]) for r in cen_rows], dtype=np.int64)
     M = np.asarray([[float(x) for x in r[col]] for r in cen_rows], dtype=np.float64)
-    enc = _fused_assign_encode(
-        df, id_col, col, cid_v, M, C, n_sub, sub_dim, residual=False
-    )
+    enc = _fused_assign_encode(df, id_col, col, cid_v, M, C, residual=False)
 
     # nprobe nearest cells per query (exact small-side math, as ivf_topk)
     q = df.filter(F.col(id_col) < n_queries).select(
@@ -831,49 +843,15 @@ def ivfpq_topk(
     )
     cen_b = cen.select("centroid_id", F.col(col).alias("__mv"))
     qc = q.crossJoin(F.broadcast(cen_b))
-    w = Window.partitionBy("qid").orderBy(
-        euclidean_sq("__qv", "__mv").asc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") <= nprobe)
-        .select("qid", "centroid_id")
-    )
+    probes = top_k_per_group(
+        qc, ["qid"], [euclidean_sq("__qv", "__mv").asc(), F.col("centroid_id").asc()], nprobe
+    ).select("qid", "centroid_id")
 
-    # per-query subspace-distance LUTs, driver-side exact (tiny model:
-    # n_queries x n_sub x n_cent doubles) — the pq_adc_topk convention,
-    # including the sequential accumulation the SQL twin mirrors
-    qrows = df.filter(F.col(id_col) < n_queries).select(id_col, col).collect()
-    lut_rows = []
-    for r in qrows:
-        x = np.asarray(r[col], dtype=np.float64)
-        per_s = []
-        for s in range(n_sub):
-            xs = x[s * sub_dim : (s + 1) * sub_dim]
-            sq = xs[None, :] - C[s]
-            sq *= sq
-            acc = sq[:, 0].copy()
-            for d in range(1, sub_dim):
-                acc += sq[:, d]
-            per_s.append([float(v) for v in acc])
-        lut_rows.append((int(r[id_col]), per_s))
-    lut_df = spark.createDataFrame(lut_rows, "qid long, lut array<array<double>>")
-
+    lut_df = _query_lut_frame(df, id_col, col, n_queries, C)
     cand = enc.join(
         F.broadcast(probes.join(F.broadcast(lut_df), "qid")), "centroid_id"
     ).filter(F.col("nid") != F.col("qid"))
-    terms = [
-        F.expr(f"element_at(element_at(lut, {s + 1}), cast(c{s} as int) + 1)")
-        for s in range(n_sub)
-    ]
-    adc = reduce(lambda a, b: a + b, terms)
-    scored = cand.select("qid", "nid", adc.alias("adc"))
-    w2 = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", F.round("adc", 9).alias("adc"), "rank")
-    )
+    return _adc_topk(cand, n_sub, k)
 
 
 def ivfpq_sql(
@@ -888,20 +866,8 @@ def ivfpq_sql(
     CTEs composed with pq_adc_sql's dists/codes/LUT CTEs — same
     centroid convention, same argmin CASE chains, same ADC term order,
     same tie rules."""
-    n_sub = len(book)
     dist_cols, mins, cases = _pq_sql_parts(book)
-
-    def eucl(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]), "
-            "p -> (p[1]-p[2])*(p[1]-p[2])))"
-        )
-
-    adc_terms = []
-    for s in range(n_sub):
-        whens = " ".join(f"WHEN {kk} THEN q.d{s}_{kk}" for kk in range(len(book[s])))
-        adc_terms.append(f"(CASE e.c{s} {whens} END)")
-    adc = " + ".join(adc_terms)
+    adc = _adc_sql(book)
     return f"""
     WITH cen AS (
       SELECT vec_id AS centroid_id, embedding FROM {table}
@@ -910,7 +876,7 @@ def ivfpq_sql(
       SELECT e.vec_id, c.centroid_id
       FROM {table} e CROSS JOIN cen c
       QUALIFY ROW_NUMBER() OVER (PARTITION BY e.vec_id
-          ORDER BY {eucl('e.embedding', 'c.embedding')}, c.centroid_id) = 1),
+          ORDER BY {_eucl_sql('e.embedding', 'c.embedding')}, c.centroid_id) = 1),
     dists AS (SELECT vec_id, {', '.join(dist_cols)} FROM {table}),
     mins AS (SELECT *, {', '.join(mins)} FROM dists),
     codes AS (SELECT vec_id, {', '.join(cases)} FROM mins),
@@ -921,20 +887,14 @@ def ivfpq_sql(
       FROM {table} q CROSS JOIN cen c
       WHERE q.vec_id < {n_queries}
       QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
-          ORDER BY {eucl('q.embedding', 'c.embedding')}, c.centroid_id) <= {nprobe}),
+          ORDER BY {_eucl_sql('q.embedding', 'c.embedding')}, c.centroid_id) <= {nprobe}),
     lut AS (SELECT * FROM dists WHERE vec_id < {n_queries}),
     scored AS (
       SELECT p.qid, e.vec_id AS nid, {adc} AS adc
       FROM probes p JOIN acodes e USING (centroid_id)
       JOIN lut q ON q.vec_id = p.qid
       WHERE e.vec_id <> p.qid),
-    ranked AS (
-      SELECT qid, nid, adc,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY adc ASC, nid ASC) AS rank
-      FROM scored)
-    SELECT qid, nid, round(adc, 9) AS adc, rank FROM ranked WHERE rank <= {k}
-    """
+    {_ranked_sql("adc", k)}"""
 
 
 # --------------------------------------------------------------------------
@@ -979,12 +939,9 @@ def ivfpq_residual_topk(
     pruning; residual encoding changes WHAT is stored per row (codes of
     x − c), not the storage or probe topology.
     """
-    from pyspark.sql.window import Window
-
     spark = df.sparkSession
     book_v = book if book is not None else pq_codebook()
     n_sub = len(book_v)
-    sub_dim = len(book_v[0][0])
     C = np.asarray(book_v, dtype=np.float64)  # (S, K, D)
 
     cen = df.filter(F.col(id_col) < n_centroids).select(
@@ -1001,13 +958,11 @@ def ivfpq_residual_topk(
     # corpus (was: assign_to_centroids_pandas + a chained _res_codes
     # UDF — the embeddings Arrow-serialized into Python twice, and the
     # assign helper re-collected the centroid frame). Bit-identity
-    # argument in _fused_assign_pq_udf; the residual subtract uses the
+    # argument in _fused_assign_encode; the residual subtract uses the
     # argmin row directly, which equals the old cid_to_row lookup
     # because cen_rows is sorted by centroid_id.
     cid_v = np.asarray(cen_ids, dtype=np.int64)
-    enc = _fused_assign_encode(
-        df, id_col, col, cid_v, M, C, n_sub, sub_dim, residual=True
-    )
+    enc = _fused_assign_encode(df, id_col, col, cid_v, M, C, residual=True)
 
     # Probes + per-(query, cell) residual LUTs, driver-side exact
     # (n_queries × nprobe × n_sub × n_cent doubles — model-sized).
@@ -1026,17 +981,8 @@ def ivfpq_residual_topk(
             acc += diff * diff
         order = sorted(range(M.shape[0]), key=lambda i: (acc[i], cen_ids[i]))
         for i in order[:nprobe]:
-            rq = x - M[i]  # query residual against THIS cell
-            per_s = []
-            for s in range(n_sub):
-                xs = rq[s * sub_dim : (s + 1) * sub_dim]
-                sq = xs[None, :] - C[s]
-                sq *= sq
-                a = sq[:, 0].copy()
-                for d in range(1, sub_dim):
-                    a += sq[:, d]
-                per_s.append([float(v) for v in a])
-            probe_rows.append((int(r[id_col]), int(cen_ids[i]), per_s))
+            # LUT of the query's residual against THIS cell
+            probe_rows.append((int(r[id_col]), int(cen_ids[i]), _lut(x - M[i], C)))
     lut_df = spark.createDataFrame(
         probe_rows, "qid long, centroid_id long, lut array<array<double>>"
     )
@@ -1044,18 +990,7 @@ def ivfpq_residual_topk(
     cand = enc.join(F.broadcast(lut_df), "centroid_id").filter(
         F.col("nid") != F.col("qid")
     )
-    terms = [
-        F.expr(f"element_at(element_at(lut, {s + 1}), cast(c{s} as int) + 1)")
-        for s in range(n_sub)
-    ]
-    adc = reduce(lambda a, b: a + b, terms)
-    scored = cand.select("qid", "nid", adc.alias("adc"))
-    w2 = Window.partitionBy("qid").orderBy(F.col("adc").asc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w2).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", F.round("adc", 9).alias("adc"), "rank")
-    )
+    return _adc_topk(cand, n_sub, k)
 
 
 def ivfadc_r_topk(
@@ -1098,8 +1033,6 @@ def ivfadc_r_topk(
     query-vector frame (n_queries rows) broadcasts likewise. The
     corpus crosses zero exchanges in both stages.
     """
-    from pyspark.sql.window import Window
-
     from hadoop_gpu_spark.functions.vectors import euclidean_sq
 
     short = ivfpq_residual_topk(
@@ -1114,12 +1047,9 @@ def ivfadc_r_topk(
     scored = fetched.join(F.broadcast(qvec), "qid").select(
         "qid", "nid", euclidean_sq("__qv", "__nv").alias("dist")
     )
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", F.round("dist", 9).alias("dist"), "rank")
-    )
+    return top_k_per_group(
+        scored, ["qid"], [F.col("dist").asc(), F.col("nid").asc()], k
+    ).select("qid", "nid", F.round("dist", 9).alias("dist"), "rank")
 
 
 def ivfadc_r_sql(
@@ -1137,24 +1067,14 @@ def ivfadc_r_sql(
     same list_zip sequential squared-diff fold q_ann_topk's conventions
     use and the same (dist asc, nid asc) tie rule."""
     inner = ivfpq_residual_sql(book, table, n_centroids, n_queries, nprobe, shortlist)
-    eucl = (
-        "list_sum(list_transform(list_zip(q.embedding::DOUBLE[], "
-        "e.embedding::DOUBLE[]), p -> (p[1]-p[2])*(p[1]-p[2])))"
-    )
     return f"""
     WITH short AS (SELECT qid, nid FROM ({inner})),
     scored AS (
-      SELECT s.qid, s.nid, {eucl} AS dist
+      SELECT s.qid, s.nid, {_eucl_sql('q.embedding', 'e.embedding')} AS dist
       FROM short s
       JOIN {table} e ON e.vec_id = s.nid
       JOIN {table} q ON q.vec_id = s.qid),
-    ranked AS (
-      SELECT qid, nid, dist,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, nid ASC) AS rank
-      FROM scored)
-    SELECT qid, nid, round(dist, 9) AS dist, rank FROM ranked WHERE rank <= {k}
-    """
+    {_ranked_sql("dist", k)}"""
 
 
 def ivfpq_residual_sql(
@@ -1170,24 +1090,12 @@ def ivfpq_residual_sql(
     the RESIDUAL array (list_zip elementwise x − c in DOUBLE) and the
     LUT evaluated per (query, probed cell) over q − c_cell — same
     argmin CASE chains, same ADC term order, same tie rules."""
-    n_sub = len(book)
     rdist_cols, rmins, rcases = _pq_sql_parts(book, elem="r[{i}]")
-
-    def eucl(a: str, b: str) -> str:
-        return (
-            f"list_sum(list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]), "
-            "p -> (p[1]-p[2])*(p[1]-p[2])))"
-        )
-
     res = (
         "list_transform(list_zip({a}::DOUBLE[], {b}::DOUBLE[]), "
         "p -> p[1] - p[2])"
     )
-    adc_terms = []
-    for s in range(n_sub):
-        whens = " ".join(f"WHEN {kk} THEN q.d{s}_{kk}" for kk in range(len(book[s])))
-        adc_terms.append(f"(CASE e.c{s} {whens} END)")
-    adc = " + ".join(adc_terms)
+    adc = _adc_sql(book)
     return f"""
     WITH cen AS (
       SELECT vec_id AS centroid_id, embedding AS cemb FROM {table}
@@ -1196,7 +1104,7 @@ def ivfpq_residual_sql(
       SELECT e.vec_id, c.centroid_id
       FROM {table} e CROSS JOIN cen c
       QUALIFY ROW_NUMBER() OVER (PARTITION BY e.vec_id
-          ORDER BY {eucl('e.embedding', 'c.cemb')}, c.centroid_id) = 1),
+          ORDER BY {_eucl_sql('e.embedding', 'c.cemb')}, c.centroid_id) = 1),
     res AS (
       SELECT e.vec_id, a.centroid_id,
              {res.format(a='e.embedding', b='c.cemb')} AS r
@@ -1211,7 +1119,7 @@ def ivfpq_residual_sql(
       FROM {table} q CROSS JOIN cen c
       WHERE q.vec_id < {n_queries}
       QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
-          ORDER BY {eucl('q.embedding', 'c.cemb')}, c.centroid_id) <= {nprobe}),
+          ORDER BY {_eucl_sql('q.embedding', 'c.cemb')}, c.centroid_id) <= {nprobe}),
     qres AS (
       SELECT p.qid, p.centroid_id,
              {res.format(a='q.embedding', b='c.cemb')} AS r
@@ -1223,10 +1131,4 @@ def ivfpq_residual_sql(
       SELECT q.qid, e.vec_id AS nid, {adc} AS adc
       FROM qlut q JOIN rcodes e ON e.centroid_id = q.centroid_id
       WHERE e.vec_id <> q.qid),
-    ranked AS (
-      SELECT qid, nid, adc,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY adc ASC, nid ASC) AS rank
-      FROM scored)
-    SELECT qid, nid, round(adc, 9) AS adc, rank FROM ranked WHERE rank <= {k}
-    """
+    {_ranked_sql("adc", k)}"""

@@ -5,17 +5,15 @@ Reference formats → Spark-native equivalents:
 - SequenceFile/MapFile → Parquet (read/write_parquet, sorted+bucketed for
   MapFile point-lookup semantics);
 - MultipleOutputFormat → write_partitioned (df.write.partitionBy);
-- NullOutputFormat → write_noop; DBInput/DBOutputFormat → read/write_jdbc;
-- NLineInputFormat → read_text_nline; TeraInputFormat → read_fixed_width;
-- Random generators → gen_random_text / gen_tera_records.
+- DBInput/DBOutputFormat → read/write_jdbc;
+- NLineInputFormat → read_text_nline;
+- TeraGen → gen_tera_records.
 
 All readers return DataFrames; writers are thin, so Catalyst keeps
 pushdown/pruning through every one of them.
 """
 
 from __future__ import annotations
-
-import string
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,17 +51,6 @@ def read_text_nline(spark: SparkSession, path: str, n: int) -> DataFrame:
     total = lines.count()
     parts = max(1, -(-total // n))
     return lines.repartition(parts)
-
-
-def read_fixed_width(spark: SparkSession, path: str, widths: list[tuple[str, int]]) -> DataFrame:
-    """TeraInputFormat (X/terasort/TeraInputFormat.java:46): fixed-width
-    records — e.g. [('key', 10), ('payload', 90)]."""
-    lines = read_text(spark, path)
-    cols, pos = [], 1
-    for name, w in widths:
-        cols.append(F.substring(F.col("line"), pos, w).alias(name))
-        pos += w
-    return lines.select(*cols)
 
 
 def write_text(
@@ -177,11 +164,6 @@ def read_sequence_file(spark: SparkSession, path: str) -> DataFrame:
     return spark.createDataFrame(rdd, schema="k string, v string")
 
 
-def write_noop(df: DataFrame) -> None:
-    """NullOutputFormat (M/lib/NullOutputFormat.java): run, discard."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 #: Embedded Derby (ships in Spark's own jars/ — derby-10.16) is the
 #: container's JDBC engine; 10.16 registers this autoloaded driver class.
 DERBY_DRIVER = "org.apache.derby.iapi.jdbc.AutoloadedDriver"
@@ -215,31 +197,7 @@ def write_jdbc(df: DataFrame, url: str, table: str, mode: str = "append", **opts
     writer.save()
 
 
-# --- synthetic generators (X/RandomTextWriter.java:82, X/terasort/TeraGen.java:60)
-
-_WORDS = [
-    "".join(w)
-    for w in zip(*[iter(string.ascii_lowercase * 40)] * 4)
-][:100]
-
-
-def gen_random_text(spark: SparkSession, num_rows: int, words_per_row: int = 20, seed: int = 42) -> DataFrame:
-    """RandomTextWriter: rows of pseudo-random words. Deterministic via
-    md5-hash chain (no engine RNG)."""
-    from hadoop_gpu_spark.functions.hashing import hash_u32
-
-    base = spark.range(num_rows)
-    word_arr = F.array(*[F.lit(w) for w in _WORDS])
-    toks = F.transform(
-        F.sequence(F.lit(1), F.lit(words_per_row)),
-        lambda i: F.element_at(
-            word_arr,
-            (hash_u32(F.concat(F.col("id").cast("string"), F.lit(":"), i.cast("string")), seed)
-             % len(_WORDS) + 1).cast("int"),
-        ),
-    )
-    return base.select(F.col("id").alias("line_id"), F.array_join(toks, " ").alias("line"))
-
+# --- synthetic generator (X/terasort/TeraGen.java:60)
 
 def gen_tera_records(spark: SparkSession, num_rows: int, seed: int = 42) -> DataFrame:
     """TeraGen: (10-char key, 90-char payload) deterministic records."""

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_gpu_spark.operators import joins, sort
-from hadoop_gpu_spark.operators.sampling import md5_sample, percent_sample
+from hadoop_gpu_spark.operators.sampling import md5_sample
 
 
 def test_override_join_rightmost_wins(spark):
@@ -21,17 +21,6 @@ def test_override_join_rightmost_wins(spark):
     # rightmost non-null wins: b overrides a; c overrides b; b's NULL at k=3
     # does not clobber (coalesce semantics, M/join/OverrideRecordReader.java:36)
     assert out == {1: "a1", 2: "b2", 3: "c3", 4: "b4"}
-
-
-def test_inner_outer_join_consistency(spark):
-    a = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "va"])
-    b = spark.createDataFrame([(2, "p"), (3, "q")], ["k", "vb"])
-    inner = joins.inner_join(a, b, "k")
-    outer = joins.outer_join(a, b, "k")
-    assert inner.count() == 1
-    assert outer.count() == 3
-    # inner ⊆ outer (join consistency, TestDatamerge.java:249-355)
-    assert inner.join(outer, ["k"], "left_anti").count() == 0
 
 
 def test_semi_anti_partition(spark):
@@ -167,6 +156,14 @@ def test_top_k_per_group(spark):
     out = sort.top_k_per_group(df, ["g"], [F.col("v").desc()], 2)
     assert out.count() == 6
     assert {r["v"] for r in out.collect()} == {8, 9}
+    assert out.schema["rank"].dataType.simpleString() == "bigint"
+    assert {(r["v"], r["rank"]) for r in out.collect()} == {(9, 1), (8, 2)}
+    # a tie on the first key ranks by the second key, as the caller orders
+    tied = spark.createDataFrame(
+        [(0, 5, "b"), (0, 5, "a"), (0, 7, "c"), (0, 1, "d")], "g int, v int, id string"
+    )
+    got = sort.top_k_per_group(tied, ["g"], [F.col("v").desc(), F.col("id").asc()], 3)
+    assert sorted((r["rank"], r["id"]) for r in got.collect()) == [(1, "c"), (2, "a"), (3, "b")]
 
 
 def test_samplers_deterministic_and_partition(spark, sf_dir):
@@ -177,7 +174,7 @@ def test_samplers_deterministic_and_partition(spark, sf_dir):
     s2 = md5_sample(li, "l_orderkey", 16).count()
     assert s1 == s2 and 0 < s1 < li.count()
     # different seeds → different (deterministic) samples
-    p = percent_sample(li, "l_orderkey", 16).count()
+    p = md5_sample(li, "l_orderkey", 16, seed=1).count()
     assert p != s1 or p > 0
 
 
@@ -500,7 +497,7 @@ def test_lsh_signature_pandas_matches_expression(spark, sf_dir):
 
     from hadoop_gpu_spark.similarity.ann import (
         lsh_signature,
-        lsh_signature_pandas,
+        lsh_signature_pandas_auto,
         lsh_signs,
     )
     from hadoop_gpu_spark.tables import load_table
@@ -509,7 +506,7 @@ def test_lsh_signature_pandas_matches_expression(spark, sf_dir):
     signs = lsh_signs(5, 64)
     both = emb.select(
         lsh_signature("embedding", signs).alias("e"),
-        lsh_signature_pandas("embedding", signs).alias("p"),
+        lsh_signature_pandas_auto("embedding", 5).alias("p"),
     )
     assert both.filter(F.col("e") != F.col("p")).count() == 0
     assert both.count() > 100
@@ -634,7 +631,7 @@ def test_vectorized_kernels_random_parity(spark):
     # LSH signatures on random float vectors (including negatives/zeros)
     from hadoop_gpu_spark.similarity.ann import (
         lsh_signature,
-        lsh_signature_pandas,
+        lsh_signature_pandas_auto,
         lsh_signs,
     )
 
@@ -646,7 +643,7 @@ def test_vectorized_kernels_random_parity(spark):
     signs = lsh_signs(6, 16)
     both = vdf.select(
         lsh_signature("embedding", signs).alias("e"),
-        lsh_signature_pandas("embedding", signs).alias("p"),
+        lsh_signature_pandas_auto("embedding", 6).alias("p"),
     )
     assert both.filter(F.col("e") != F.col("p")).count() == 0
 

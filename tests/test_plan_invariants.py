@@ -417,8 +417,7 @@ SCAN_BUDGET = {
     "q_bucketed_ctas": 2,
     # r12 registrations: bm25's 2 = token scan + the broadcast 1-row
     # corpus-stats aggregate scan that replaced the construction-time
-    # collect (with precomputed corpus_stats the operator plans ONE scan
-    # — pinned in test_r11_candidates); semantic_dedup's 2 = corpus scan
+    # collect (pinned in test_r11_candidates); semantic_dedup's 2 = corpus scan
     # + the 8-row centroid-table scan it cross-joins; bpe's 0 = the
     # merge loop ran at construction over the checkpointed word-count
     # table, the returned frame is the local 8-row merge table (the
@@ -764,12 +763,6 @@ ALLOWED_MODULE_BROADCAST_HINTS = {
         "prunes the df-per-term aggregate input before the shuffle): "
         "distinct terms of the n_seeds seed documents — bounded by "
         "n_seeds x max document length, never corpus-vocab-sized",
-    ("operators/retrieval.py",
-     "spark.createDataFrame([(int(n_docs), int(total_tokens))], "
-     "'__n long, __tt long')"):
-        "MoreLikeThis precomputed corpus stats: a 1-row literal frame "
-        "(the corpus_stats fast path, mirroring the bm25 'stats' 1-row "
-        "aggregate on the default path)",
     ("similarity/quantize.py", "cen_b"):
         "IVF-PQ coarse centroid table: n_centroids rows (first-k "
         "convention), never corpus-sized",

@@ -371,6 +371,26 @@ def test_no_module_level_mutable_state():
     assert found - allowed == set(), "module-level mutable state; use session.EngineState"
 
 
+def test_ranking_operators_use_the_one_top_k():
+    # The ranking families rank through operators/sort.top_k_per_group,
+    # so a per-query top-k (and any bound pruning added to it) lives in
+    # one place. A row_number call in these modules is a second copy.
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "hadoop_gpu_spark"
+    offenders = []
+    for rel in ("operators/retrieval.py", "similarity/ann.py", "similarity/quantize.py"):
+        for node in ast.walk(ast.parse((pkg / rel).read_text())):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            name = func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+            if name == "row_number":
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"row_number outside sort.top_k_per_group: {offenders}"
+
+
 def test_eager_persist_materializes_and_releases(spark):
     # The dual-branch-recompute cure (utils.eager_persist) end-to-end:
     # the frame is cached with recomputable lineage at construction,

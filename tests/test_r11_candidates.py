@@ -81,26 +81,17 @@ def test_bm25_absent_term_query_yields_no_rows(spark, sf_dir):
 def test_bm25_plan_scan_shape_no_vocab_broadcast(spark, sf_dir):
     # The 100 TB shape: the returned plan carries BOTH the token scan
     # and the broadcast 1-row stats scan (two scans, one job, zero
-    # driver barriers); with precomputed corpus_stats it drops to ONE
-    # scan. Term filter pushed below the aggregate, corpus text never
-    # shuffles.
+    # driver barriers). Term filter pushed below the aggregate, corpus
+    # text never shuffles.
     import re
 
     from hadoop_gpu_spark import plans
     from hadoop_gpu_spark import queries as q
-    from hadoop_gpu_spark.operators.retrieval import bm25_topk
-    from hadoop_gpu_spark.queries import _BM25_QUERIES
-    from hadoop_gpu_spark.tables import load_table
 
     df = q.q_bm25_topk(spark, sf_dir)
     plan = plans.formatted_plan(df)
     assert len(re.findall(r"^\s*\(\d+\) Scan parquet\b", plan, re.M)) == 2, plan
     assert "text" not in plans.shuffled_columns(df)
-
-    docs = load_table(spark, "documents", sf_dir)
-    one = bm25_topk(docs, _BM25_QUERIES, top_k=10, corpus_stats=(1000, 50000))
-    plan1 = plans.formatted_plan(one)
-    assert len(re.findall(r"^\s*\(\d+\) Scan parquet\b", plan1, re.M)) == 1, plan1
 
 
 def test_bm25_construction_is_lazy(spark):

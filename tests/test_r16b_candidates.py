@@ -242,7 +242,7 @@ def test_morelikethis_filtered_matches_python_reference(spark, sf_dir):
 def test_morelikethis_default_knobs_are_noop_identity(spark, sf_dir):
     # Explicit default knobs must reproduce the registered
     # q_morelikethis EXACTLY — the knob machinery may not perturb the
-    # default path (its plan pin and oracle text are byte-frozen).
+    # default result.
     from hadoop_gpu_spark import queries as q
     from hadoop_gpu_spark.operators.retrieval import morelikethis_topk
     from hadoop_gpu_spark.tables import load_table
