@@ -60,7 +60,6 @@ import warnings
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 # Auto-sizing (n_centroids=None): coarse probing only pays once the
 # centroid table outgrows a broadcast row-scan's trivial range — below
@@ -76,14 +75,15 @@ PAIR_BLOCK_ROWS = 2048
 def auto_centroid_config(n_rows: int) -> tuple[int, int | None]:
     """(n_centroids, coarse_nlist) for a corpus of ``n_rows`` vectors.
 
-    The sizing ARCHITECTURE.md derives from the r12 sf1 measurements:
-    exact assignment costs k cosines/vector and the within-cluster pair
-    stage ~N²/k pair cosines, so k ~ sqrt(N) balances them — but flat
-    assignment at that k is N^1.5 total, so large k switches on the
-    two-level coarse quantizer (coarse_nlist ~ sqrt(k)), dropping
-    per-vector assignment to ~2*sqrt(k) and the whole operator to
-    ~linear. Small corpora (k < AUTO_COARSE_MIN_K) keep the exact flat
-    path: the quantizer's constant factor outweighs it there.
+    Sized from the r12 sf1 measurements, where a fixed small k took 25x
+    the wall time at 10x the data: exact assignment costs k
+    cosines/vector and the within-cluster pair stage ~N²/k pair cosines,
+    so k ~ sqrt(N) balances them — but flat assignment at that k is N^1.5
+    total, so large k switches on the two-level coarse quantizer
+    (coarse_nlist ~ sqrt(k)), dropping per-vector assignment to
+    ~2*sqrt(k) and the whole operator to ~linear. Small corpora
+    (k < AUTO_COARSE_MIN_K) keep the exact flat path: the quantizer's
+    constant factor outweighs it there.
     """
     k = max(1, math.isqrt(max(0, n_rows)))
     if k < AUTO_COARSE_MIN_K:
@@ -176,6 +176,7 @@ def semantic_dedup(
     fine centroids, each resident in its own cell.
     """
     from hadoop_gpu_spark.functions.vectors import cosine
+    from hadoop_gpu_spark.operators.sort import top_k_per_group
     from hadoop_gpu_spark.utils import eager_persist
 
     if n_centroids is None:
@@ -223,11 +224,10 @@ def semantic_dedup(
     scored = emb.select(id_col, vec_col).crossJoin(F.broadcast(cen)).withColumn(
         "__cos", cosine(vec_col, "__cvec")
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("__cos").desc(), F.col("__cid"))
     asg = eager_persist(
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, "__cid", vec_col)
+        top_k_per_group(
+            scored, [id_col], [F.col("__cos").desc(), F.col("__cid")], 1
+        ).select(id_col, "__cid", vec_col)
     )
     a = asg.select(
         "__cid", F.col(id_col).alias("__a"), F.col(vec_col).alias("__va")

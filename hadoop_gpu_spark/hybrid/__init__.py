@@ -219,24 +219,3 @@ def _make_router(cpu_run, gpu_run, x: int, total: int):
         yield from fn(stripped)
 
     return route
-
-
-@dataclass
-class HybridGroupedOp:
-    """Grouped (applyInPandas) variant of HybridOp: one whole key-group per
-    call — the reference's NLine-dispatch contract (one k-means dataset per
-    map task). ``cpu_fn``/``gpu_fn``: pd.DataFrame -> pd.DataFrame.
-    """
-
-    name: str
-    cpu_fn: Callable[[pd.DataFrame], pd.DataFrame]
-    schema: str
-    gpu_fn: Callable[[pd.DataFrame], pd.DataFrame] | None = None
-
-    def apply(self, df: DataFrame, group_cols: list[str], force_path: str | None = None) -> DataFrame:
-        use_gpu = (
-            force_path == "gpu"
-            or (force_path is None and self.gpu_fn is not None and GPU_AVAILABLE)
-        )
-        fn = self.gpu_fn if use_gpu and self.gpu_fn else self.cpu_fn
-        return df.groupBy(*group_cols).applyInPandas(fn, schema=self.schema)

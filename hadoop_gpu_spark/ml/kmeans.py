@@ -15,8 +15,9 @@ test. At 100 TB: points never move; only k-row centroid tables circulate.
 
 Formulation B (``kmeans_grouped``) — per-dataset iterative job mirroring
 the reference's NLine-dispatch model (one whole dataset per map call):
-``groupBy(dataset_id).applyInPandas(lloyd)`` with numpy inside — the
-CPU half of the HybridOp pair (hybrid module swaps in a CuPy body).
+``groupBy(dataset_id).applyInPandas(lloyd)`` with :func:`lloyd_numpy`
+inside. :func:`lloyd_cupy` is the same loop on CuPy arrays; no query
+routes to it yet (ROADMAP item 8 wires the pair to ``hybrid.run_hybrid``).
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hadoop_gpu_spark.functions.vectors import euclidean_sq
 
 # At or below this many points the IDENTICAL Lloyd iterations run
 # driver-side (utils.collect_at_most) — but ONLY when every feature value
@@ -336,15 +336,12 @@ def kmeans_grouped(
 
 
 def lloyd_cupy(pts, cents, max_iter: int = 100, eps: float = 1.0, dtype="float32"):
-    """GPU half of the k-means HybridOp pair — same semantics as
-    :func:`lloyd_numpy` on CuPy arrays (mirrors gpu-kmeans2D.cu:59-115:
-    assign + recalc kernels). Raises ImportError when no CUDA stack is
-    present; callers fall back to the CPU path (the reference's behavior
-    when a node has no GPU slot).
+    """GPU twin of :func:`lloyd_numpy` — same semantics on CuPy arrays
+    (mirrors gpu-kmeans2D.cu:59-115: assign + recalc kernels). Raises
+    ImportError when no CUDA stack is present.
 
     ``dtype`` mirrors lloyd_numpy's parameter so the float64 exact mode
-    (the bit-deterministic oracle path) is preserved whichever backend
-    ``select_lloyd_backend('auto')`` picks.
+    (the bit-deterministic oracle path) is preserved on either leg.
     """
     import cupy as cp  # gated: not present in CPU-only environments
 
@@ -379,18 +376,3 @@ def resolve_gpu_dtype(dtype) -> str:
     canonicalizes every spelling first.
     """
     return "float64" if np.dtype(dtype) == np.float64 else "float32"
-
-
-def select_lloyd_backend(backend: str = "auto"):
-    """cpubin/gpubin selection (SubmitterToAccels.java:145-149 analog):
-    'auto' prefers the GPU kernel when CuPy imports, else CPU."""
-    if backend == "numpy":
-        return lloyd_numpy
-    if backend == "cupy":
-        return lloyd_cupy
-    try:
-        import cupy  # noqa: F401
-
-        return lloyd_cupy
-    except Exception:
-        return lloyd_numpy

@@ -1,9 +1,10 @@
 """Projection / record-shaping operators.
 
-Reference (SURVEY.md §2.2): IdentityMapper/Reducer, InverseMapper
-(``M/lib/InverseMapper.java:33``), RegexMapper (``M/lib/RegexMapper.java:35``),
-TokenCountMapper (``M/lib/TokenCountMapper.java:38``),
-FieldSelectionMapReduce (``M/lib/FieldSelectionMapReduce.java:64``).
+Reference (SURVEY.md §2.2): InverseMapper (``M/lib/InverseMapper.java:33``),
+RegexMapper (``M/lib/RegexMapper.java:35``), TokenCountMapper
+(``M/lib/TokenCountMapper.java:38``), FieldSelectionMapReduce
+(``M/lib/FieldSelectionMapReduce.java:64``). IdentityMapper/Reducer needs
+no operator: it is the DataFrame itself.
 
 All pure Column expressions — whole-stage codegen, no Python.
 """
@@ -14,11 +15,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOKEN_SPLIT_RE = r"\s+"
-
-
-def identity(df: DataFrame) -> DataFrame:
-    """IdentityMapper/IdentityReducer — M/lib/IdentityMapper.java:32."""
-    return df
 
 
 def inverse(df: DataFrame, key: str, value: str) -> DataFrame:

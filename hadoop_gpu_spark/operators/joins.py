@@ -18,7 +18,8 @@ Scale notes:
 - ``broadcast_join`` pins the small side below the driver; use for dims
   (region/nation/supplier at any SF, part/customer at small SF).
 - Equi-joins shuffle both sides on the key — at 100 TB pre-bucket fact
-  tables on the join key (``sources.bucketed``) to get zero-shuffle SMJ.
+  tables on the join key (``bucketBy``, as q_bucketed_ctas does) to get
+  zero-shuffle SMJ.
 - AQE (enabled in session.py) converts to broadcast at runtime when a side
   turns out small, and splits skewed partitions.
 """

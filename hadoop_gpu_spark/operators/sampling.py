@@ -66,7 +66,7 @@ def domain_cap(
     value, chosen by deterministic md5 rank (the crawl-pipeline "cap each
     domain" pass that stops over-represented sources from dominating a
     training mix; beyond-ref LLM-pipeline operator in the InputSampler
-    family above). Adds a ``rank`` column (1..n within the key).
+    family above). Adds a BIGINT ``rank`` column (1..n within the key).
 
     Selection is md5(key || NUL || id) order with id as tiebreak —
     reproducible across engines and runs, unlike df.sample.
@@ -82,7 +82,7 @@ def domain_cap(
     would have sent 30% of the corpus to one reducer sends n rows per
     upstream partition instead.
     """
-    from pyspark.sql.window import Window
+    from hadoop_gpu_spark.operators.sort import top_k_per_group
 
     rank_key = F.md5(
         F.encode(
@@ -112,9 +112,5 @@ def domain_cap(
         work = work.sortWithinPartitions(key_col, "__rk", id_col).mapInPandas(
             local_cap, schema=work.schema
         )
-    w = Window.partitionBy(key_col).orderBy(F.col("__rk"), F.col(id_col))
-    return (
-        work.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n)
-        .drop("__rk")
-    )
+    ranked = top_k_per_group(work, [key_col], [F.col("__rk"), F.col(id_col)], n)
+    return ranked.drop("__rk")

@@ -70,9 +70,10 @@ def top_k_per_group(
     """Per-group top-k: the first ``k`` rows of each group under the
     caller's order, each with its 1-based BIGINT position in ``rank``.
 
-    Every ranking operator (BM25 family, RRF, brute/IVF/LSH ANN, PQ and
-    IVF-PQ, IVF probe selection) ranks through it, so bound pruning has
-    one place to land. The reference idiom is sort then head
+    Every per-group top-k with a constant k in the engine ranks through
+    it (the ranking families, the IVF probe selections, the streaming
+    top-k, dedup and sampling caps), so bound pruning has one place to
+    land. The reference idiom is sort then head
     (X/Grep.java:71-82); here one shuffle on the group key feeds a
     row_number window, and Spark plans a partial window group limit
     before that shuffle, so at most k rows per group and map task cross

@@ -1635,11 +1635,10 @@ _IVF_COS_SQL = (
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF probe over deterministic centroids.
 
-    Triple-scan adjudication (r08, per the written test in
-    ARCHITECTURE.md): the three embeddings scans are semantically
-    DISTINCT, filter-pushed passes — the full-corpus assignment pass,
-    the vec_id<8 probe set, and the vec_id<16 centroid table (the
-    latter two prune to handfuls of rows AT THE PARQUET SCAN via
+    Triple-scan adjudication (r08): the three embeddings scans are
+    semantically DISTINCT, filter-pushed passes — the full-corpus
+    assignment pass, the vec_id<8 probe set, and the vec_id<16 centroid
+    table (the latter two prune to handfuls of rows AT THE PARQUET SCAN via
     PushedFilters; in production they would be separate tables). No
     branch recomputes a derived subtree, so the scans stand — the
     q_bloom_decontaminate precedent."""
@@ -2199,14 +2198,9 @@ def q02_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = part.join(ps, part.p_partkey == ps.l_partkey).join(
         supplier, ps.l_suppkey == supplier.s_suppkey
     )
-    w = Window.partitionBy("p_partkey").orderBy(
-        F.col("s_acctbal").asc(), F.col("s_suppkey").asc()
-    )
-    return (
-        cand.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("p_partkey", "p_name", "s_suppkey", "s_name", "s_acctbal")
-    )
+    return sort_ops.top_k_per_group(
+        cand, ["p_partkey"], [F.col("s_acctbal").asc(), F.col("s_suppkey").asc()], 1
+    ).select("p_partkey", "p_name", "s_suppkey", "s_name", "s_acctbal")
 
 
 @query(
@@ -2873,12 +2867,9 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tfidf",
         F.round(F.col("tf") * F.log(F.lit(n_docs) / F.col("df")), 9),
     )
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 3)
-        .select("doc_id", "term", "tfidf", "rank")
-    )
+    return sort_ops.top_k_per_group(
+        scored, ["doc_id"], [F.col("tfidf").desc(), F.col("term").asc()], 3
+    ).select("doc_id", "term", "tfidf", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -4587,7 +4578,7 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "source")
     out = domain_cap(docs, "source", "doc_id", n=8, pre_cap=True)
-    return out.select("doc_id", "source", F.col("rank").cast("long").alias("rank"))
+    return out.select("doc_id", "source", "rank")
 
 
 # Distance-to-centroid outliers, NOT norm outliers: the embeddings corpus
@@ -4753,10 +4744,8 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-8 gates (registered r08, first driver rows this round — built and
-# oracle-pinned at both scales since r06 via tests/test_pending_gates.py;
-# the r07 window was exactly spoken for, so registration waited for the
-# enumerated r08 slots per ARCHITECTURE.md "Round-7 outcomes" #2).
+# Round-8 gates (registered r08; built and oracle-pinned at both scales
+# since r06 via tests/test_pending_gates.py).
 # ===========================================================================
 def _funnel_oracle() -> str:
     from hadoop_gpu_spark.operators.funnel import funnel_sql

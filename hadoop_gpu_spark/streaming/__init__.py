@@ -374,14 +374,11 @@ def topk_per_window_snapshot(
     hour with row_number semantics (ties break to the lexicographically
     first type, the same deterministic rule every ranked gate uses).
     """
-    from pyspark.sql.window import Window
+    from hadoop_gpu_spark.operators.sort import top_k_per_group
 
     def rank(batch_df: DataFrame) -> DataFrame:
-        w = Window.partitionBy("hour").orderBy(
-            F.col("cnt").desc(), F.col("event_type").asc()
-        )
-        return batch_df.withColumn("rank", F.row_number().over(w).cast("long")).filter(
-            F.col("rank") <= k
+        return top_k_per_group(
+            batch_df, ["hour"], [F.col("cnt").desc(), F.col("event_type").asc()], k
         )
 
     return _drain_to_snapshot(agg_stream, out_dir, rank)

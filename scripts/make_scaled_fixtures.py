@@ -20,7 +20,7 @@ Usage::
 
 defaults: factor=10, src=/root/testdata/sf0.1, out=/tmp/sf1. Output goes
 OUTSIDE the repo by default — these are soak inputs, not checked-in
-fixtures; the committed evidence is the scaling table in ARCHITECTURE.md.
+fixtures; `scripts/scale_soak.py --json` records the scaling table.
 """
 
 from __future__ import annotations

@@ -6,7 +6,6 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-import pytest
 
 from hadoop_gpu_spark.hybrid import HybridOp, makespan_split, run_hybrid
 
@@ -82,19 +81,6 @@ def test_run_hybrid_no_gpu_falls_back(spark):
     op = HybridOp("double", _double_cpu, "x long", gpu_fn=None)
     out = sorted(r["x"] for r in run_hybrid(op, df).collect())
     assert out == [2 * i for i in range(50)]
-
-
-def test_hybrid_grouped_op(spark):
-    from hadoop_gpu_spark.hybrid import HybridGroupedOp
-
-    df = spark.createDataFrame([(g, v) for g in range(3) for v in range(5)], ["g", "v"])
-
-    def agg_cpu(pdf):
-        return pd.DataFrame({"g": [pdf["g"].iloc[0]], "s": [int(pdf["v"].sum())]})
-
-    op = HybridGroupedOp("groupsum", agg_cpu, "g long, s long", gpu_fn=agg_cpu)
-    out = {r["g"]: r["s"] for r in op.apply(df, ["g"]).collect()}
-    assert out == {0: 10, 1: 10, 2: 10}
 
 
 def test_resource_profile_helpers(spark):

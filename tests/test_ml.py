@@ -196,18 +196,6 @@ def test_matmul_cells_and_blocked_match_numpy(spark):
             assert np.allclose(out_blocks[(i, j)], C[i * m:(i + 1) * m, j * m:(j + 1) * m], atol=1e-9)
 
 
-def test_lloyd_backend_selection_and_fallback():
-    import pytest as _pytest
-
-    from hadoop_gpu_spark.ml.kmeans import lloyd_numpy, select_lloyd_backend
-
-    # no CUDA in this container: auto falls back to the CPU kernel
-    assert select_lloyd_backend("auto") is lloyd_numpy
-    assert select_lloyd_backend("numpy") is lloyd_numpy
-    with _pytest.raises(ImportError):
-        select_lloyd_backend("cupy")(np.zeros((4, 2)), np.zeros((2, 2)))
-
-
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
     # Approximate path quality: IVF with nprobe=4 over 16 cells must agree
     # with exact brute force on most of the top-5 lists.

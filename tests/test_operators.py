@@ -281,19 +281,6 @@ def test_kvjob_skip_bad_records(spark):
     assert got == {"1": 1, "2": 2, "4": 4}  # record 3 skipped, job survived
 
 
-def test_read_xml_records(spark, tmp_path):
-    from hadoop_gpu_spark.sources import read_xml_records
-
-    p = tmp_path / "recs.xml"
-    p.write_text(
-        "<root><rec><name>alpha</name><n>1</n></rec>"
-        "<rec><name>beta</name><n>2</n></rec></root>"
-    )
-    out = read_xml_records(spark, str(p), "rec", ["name", "n"])
-    rows = {r["name"]: r["n"] for r in out.collect()}
-    assert rows == {"alpha": "1", "beta": "2"}
-
-
 def test_salted_agg_matches_plain(spark, sf_dir):
     from hadoop_gpu_spark.operators.skew import salted_agg
     from hadoop_gpu_spark.tables import load_table

@@ -798,8 +798,8 @@ def test_cms_sql_twin_matches_reference_fuzz():
 
 def test_semantic_dedup_auto_config_sizing():
     # the r13 scale-safety default: k ~ sqrt(N), coarse quantizer at
-    # sqrt(k) once k clears AUTO_COARSE_MIN_K — the ARCHITECTURE.md
-    # sizing that keeps the operator ~linear (a fixed small k measured
+    # sqrt(k) once k clears AUTO_COARSE_MIN_K — auto_centroid_config's
+    # documented sizing that keeps the operator ~linear (a fixed small k measured
     # 25x wall at 10x data in the r12 sf1 check).
     from hadoop_gpu_spark.dedup.semantic import (
         AUTO_COARSE_MIN_K,

@@ -4,16 +4,6 @@ import os
 
 from hadoop_gpu_spark import sources
 from hadoop_gpu_spark.operators import sort
-from hadoop_gpu_spark.tables import load_table
-
-
-def test_text_kv_roundtrip(spark, tmp_path):
-    df = spark.createDataFrame([("k1", "v1"), ("k2", "v2\twith tab")], ["k", "v"])
-    path = str(tmp_path / "kv")
-    sources.write_text(df, path)
-    back = {r["k"]: r["v"] for r in sources.read_kv_text(spark, path).collect()}
-    assert back["k1"] == "v1"
-    assert back["k2"] == "v2\twith tab"  # first-tab split only (KeyValueLineRecordReader)
 
 
 def test_fixed_width_tera(spark):
@@ -32,52 +22,6 @@ def test_terasort_pipeline(spark, tmp_path):
     assert sort.sort_validator(out, ["key"])
     # checksum preserved (record multiset unchanged)
     assert out.count() == 500
-
-
-def test_write_partitioned_multiple_outputs(spark, sf_dir, tmp_path):
-    docs = load_table(spark, "documents", sf_dir).limit(100)
-    path = str(tmp_path / "by_lang")
-    sources.write_partitioned(docs, path, ["lang"])
-    dirs = {d for d in os.listdir(path) if d.startswith("lang=")}
-    langs = {r["lang"] for r in docs.select("lang").distinct().collect()}
-    assert dirs == {f"lang={l}" for l in langs}
-    back = spark.read.parquet(path)
-    assert back.count() == 100
-
-
-def test_read_text_nline(spark, sf_dir, tmp_path):
-    df = spark.range(97).selectExpr("cast(id as string) as v")
-    p = str(tmp_path / "lines")
-    df.write.text(p)
-    nl = sources.read_text_nline(spark, p, n=10)
-    assert nl.rdd.getNumPartitions() == 10  # ceil(97/10)
-    assert nl.count() == 97
-
-
-def test_write_parquet_bloom_and_sorted(spark, sf_dir, tmp_path):
-    # BloomMapFile analog: bloom-filtered sorted parquet; verify the bloom
-    # header landed in the file metadata and point lookups work.
-    import pyarrow.parquet as pq
-
-    orders = load_table(spark, "orders", sf_dir)
-    path = str(tmp_path / "orders_bloom")
-    # parquet-mr skips blooms for fully dictionary-encoded columns, so
-    # disable dictionary encoding to force the bloom to materialize.
-    sources.write_parquet(
-        orders.repartition(1), path, sort_by=["o_orderkey"],
-        bloom_cols=["o_orderkey"], **{"parquet.enable.dictionary": "false"}
-    )
-    back = spark.read.parquet(path)
-    some_key = orders.select("o_orderkey").first()[0]
-    assert back.filter(back.o_orderkey == some_key).count() >= 1
-    # sorted-run invariant (MapFile contract): keys ascending within file
-    import glob
-
-    f = glob.glob(path + "/*.parquet")[0]
-    keys = pq.read_table(f, columns=["o_orderkey"])["o_orderkey"].to_pylist()
-    assert keys == sorted(keys)
-    # (this pyarrow build does not expose bloom_filter_offset; the option
-    # plumbing is exercised by the write itself — bad options would throw)
 
 
 def test_jdbc_derby_roundtrip(spark, tmp_path):
@@ -100,67 +44,6 @@ def test_jdbc_derby_roundtrip(spark, tmp_path):
     assert got == want
 
 
-def test_sequence_file_roundtrip(spark, tmp_path):
-    # Real Hadoop SequenceFile (Text/Text) in and out - format-level
-    # interchange with existing SequenceFile corpora, not a substitute.
-    df = spark.range(50).selectExpr(
-        "cast(id as string) as k", "concat('v', cast(id as string)) as v"
-    )
-    p = str(tmp_path / "seq")
-    sources.write_sequence_file(df, p, "k", "v")
-    back = sources.read_sequence_file(spark, p)
-    assert back.count() == 50
-    got = {(r["k"], r["v"]) for r in back.collect()}
-    assert got == {(str(i), f"v{i}") for i in range(50)}
-    # on-disk magic: SequenceFiles start with 'SEQ'
-    import glob
-
-    part = sorted(glob.glob(p + "/part-*"))[0]
-    with open(part, "rb") as f:
-        assert f.read(3) == b"SEQ"
-
-
-def test_sequence_file_compressed_roundtrips(spark, tmp_path):
-    # The reference's other two on-disk layouts (C/io/SequenceFile.java:
-    # RecordCompressWriter and BlockCompressWriter): same (k, v) set back,
-    # and the header flags must actually show the layout — the v6 header is
-    # SEQ, version, keyClass, valueClass, compressed?, blockCompressed?,
-    # codecClass — so we assert bytes, not just successful reads.
-    import glob
-
-    df = spark.range(200).selectExpr(
-        "cast(id as string) as k", "repeat(concat('v', cast(id as string)), 20) as v"
-    )
-    expect = {(r["k"], r["v"]) for r in df.collect()}
-
-    def header_flags(path):
-        part = sorted(glob.glob(path + "/part-*"))[0]
-        with open(part, "rb") as f:
-            head = f.read(400)
-        assert head[:3] == b"SEQ"
-        # after magic+version and the two class-name strings come the two
-        # boolean bytes: valueCompressed, blockCompressed
-        i = 4
-        for _ in range(2):  # skip key/value class names (vint len + bytes)
-            n = head[i]
-            i += 1 + n
-        return bool(head[i]), bool(head[i + 1]), head
-
-    for name, (codec, block) in {
-        "rec_gzip": ("gzip", False),
-        "blk_gzip": ("gzip", True),
-        "rec_bzip2": ("bzip2", False),
-    }.items():
-        p = str(tmp_path / name)
-        sources.write_sequence_file(df, p, "k", "v", compression=codec, block=block)
-        compressed, block_flag, head = header_flags(p)
-        assert compressed, name
-        assert block_flag == block, (name, head[:120])
-        assert sources.SEQFILE_CODECS[codec].encode() in head, name
-        back = sources.read_sequence_file(spark, p)
-        assert {(r["k"], r["v"]) for r in back.collect()} == expect, name
-
-
 def test_many_small_files_combine_into_few_partitions(spark, tmp_path):
     # CombineFileInputFormat / MultiFileWordCount analog: Spark's
     # files.openCostInBytes (1 MB, session.py) bin-packs many tiny files
@@ -171,67 +54,10 @@ def test_many_small_files_combine_into_few_partitions(spark, tmp_path):
     spark.range(2000).repartition(50).write.parquet(path)
     back = spark.read.parquet(path)
     n_parts = back.rdd.getNumPartitions()
-    n_files = len([f for f in __import__("os").listdir(path) if f.startswith("part-")])
+    n_files = len([f for f in os.listdir(path) if f.startswith("part-")])
     assert n_files >= 40, n_files
     # local[32] floor: bytesPerCore targets defaultParallelism, so Spark
     # packs ~2 tiny files per partition here (and far more once file count
     # >> cores); the invariant is packing happened at all, not a ratio.
     assert n_parts <= n_files / 2, (n_parts, n_files)
     assert back.count() == 2000
-
-
-def test_compressed_text_output_roundtrip(spark, tmp_path):
-    # FileOutputFormat.setCompressOutput analog: gzip'd text parts, read
-    # back transparently by extension (the TextInputFormat codec rule).
-    import glob
-    import gzip
-
-    df = spark.createDataFrame([("k1", "v1"), ("k2", "v2")], ["k", "v"])
-    p = str(tmp_path / "txt_gz")
-    sources.write_text(df, p, compression="gzip")
-    parts = glob.glob(p + "/part-*.gz")
-    assert parts, "no .gz parts written"
-    # really gzip bytes, not renamed — read every part: which parts are
-    # non-empty depends on the 2-row df's physical partitioning.
-    blob = "".join(gzip.open(f, "rt").read() for f in sorted(parts))
-    assert "\t" in blob
-    back = {r["k"]: r["v"] for r in sources.read_kv_text(spark, p).collect()}
-    assert back == {"k1": "v1", "k2": "v2"}
-
-
-def test_compact_parquet_small_files(spark, tmp_path):
-    # The operational op for streaming/incremental output: many tiny
-    # files in, few scan-sized files out, identical content.
-    from pyspark.sql import functions as F2
-
-    from hadoop_gpu_spark.sources import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    df = spark.range(10_000).withColumn("v", F2.md5(F2.col("id").cast("string")))
-    df.repartition(64).write.parquet(src)  # 64 tiny files
-    stats = compact_parquet(spark, src, dst, target_bytes=1 << 30)
-    assert stats["files_in"] >= 64
-    assert stats["files_out"] == 1  # total data far below one target file
-    a = sorted(r["v"] for r in spark.read.parquet(src).collect())
-    b = sorted(r["v"] for r in spark.read.parquet(dst).collect())
-    assert a == b and len(a) == 10_000
-
-
-def test_compact_parquet_partitioned(spark, tmp_path):
-    from pyspark.sql import functions as F2
-
-    from hadoop_gpu_spark.sources import compact_parquet
-
-    src = str(tmp_path / "frag_part")
-    dst = str(tmp_path / "comp_part")
-    df = spark.range(3_000).withColumn("p", (F2.col("id") % 3).cast("int"))
-    df.repartition(48).write.partitionBy("p").parquet(src)  # ~144 files
-    stats = compact_parquet(spark, src, dst, target_bytes=1 << 30, partition_cols=["p"])
-    assert stats["files_out"] <= 3  # at most one file per Hive partition
-    got = spark.read.parquet(dst)
-    assert got.count() == 3_000
-    assert {r["p"] for r in got.select("p").distinct().collect()} == {0, 1, 2}
-    # partition pruning must still work on the compacted layout
-    pruned = got.filter(F2.col("p") == 1)
-    assert pruned.count() == 1_000
