@@ -4,7 +4,8 @@ Reference semantics:
 - cell form (apps/pipes/matmul/cpu-matmul/cpu-matmul.cc:33-87): each record
   carries row-vector a_i and col-vector b_j; map emits per-k products,
   reduce sums → C[i,j]. In Spark the whole per-record pipeline collapses
-  to one array expression: C[i,j] = dot(a, b) — no explode, no shuffle.
+  to one array expression: C[i,j] = dot(a, b) — no explode, no shuffle
+  (``gram_matrix``).
 - blocked form (cpu-submatmul.cc:33-176): records carry m×m sub-blocks
   SA(i,k), SB(k,j); map multiplies blocks, reduce sums blocks elementwise
   per (i,j). Spark: join on k, numpy matmul per pair via arrays, then
@@ -21,11 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_gpu_spark.functions.vectors import dot
-
-
-def matmul_cells(cells: DataFrame, a_col: str = "a", b_col: str = "b") -> DataFrame:
-    """Cell form: (i, j, a[], b[]) → (i, j, c = Σ a[k]*b[k])."""
-    return cells.select("i", "j", dot(a_col, b_col).alias("c"))
 
 
 def gram_matrix(vectors: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:

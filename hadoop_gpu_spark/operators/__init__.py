@@ -3,6 +3,8 @@
 Each module re-expresses a family of reference operators as idiomatic
 DataFrame transformations. Catalyst owns the physical strategy; these
 wrappers add the reference semantics (override-join, field selection,
-key-field sort specs, aggregate descriptors, ...) and scale hints
-(broadcast, range partitioning).
+per-group top-k, the Streaming and Pipes subprocess exchanges, ...) and
+scale hints (broadcast, salting). Where a reference operator is a Spark
+built-in (``orderBy`` for total-order sort, ``rlike`` for RegexFilter,
+``df.observe`` for counters), no wrapper is kept.
 """

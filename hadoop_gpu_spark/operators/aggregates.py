@@ -124,28 +124,3 @@ def uniq_value_count(
     else:
         agg = F.approx_count_distinct(F.col(value_col))
     return df.groupBy(*group_cols).agg(agg.alias("uniq_count"))
-
-
-def global_counters(df: DataFrame, counters: dict[str, Column]) -> dict[str, int]:
-    """Job-wide named counters (reference ``M/Counters.java:53``).
-
-    One pass, one row back to the driver. For side-effect-free observation of
-    a flowing DataFrame use ``df.observe`` instead.
-    """
-    row = df.agg(*[c.alias(name) for name, c in counters.items()]).collect()[0]
-    return row.asDict()
-
-
-def observed_counters(df: DataFrame, counters: dict[str, Column]):
-    """Counters via the Observation API — metrics piggyback on whatever
-    action the caller runs next (no extra pass, unlike global_counters).
-
-    Returns (observed_df, observation); read ``observation.get`` after an
-    action. This is the closest analog to the reference's live counters
-    (task → umbilical → JobTracker aggregation, M/Counters.java:53).
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(obs, *[c.alias(name) for name, c in counters.items()])
-    return out, obs

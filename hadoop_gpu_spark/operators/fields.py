@@ -81,27 +81,3 @@ def field_selection(
         alias = aliases[i] if aliases else f"f{idx}"
         cols.append(F.element_at(arr, idx + 1).alias(alias))  # element_at is 1-based
     return df.select(*cols)
-
-
-def parse_field_spec(spec: str) -> list[int]:
-    """Parse the reference's field-selection spec format into 0-based
-    indices: ``"0-2:4"`` → [0, 1, 2, 4] (ranges inclusive, ':'-separated;
-    M/lib/FieldSelectionMapReduce.java:64 key/value spec syntax).
-
-    Open-ended ranges ("3-") are not supported here — pass explicit ends
-    (the reference resolves them against the record width at runtime;
-    DataFrame schemas make the width explicit instead).
-    """
-    out: list[int] = []
-    for part in spec.split(":"):
-        part = part.strip()
-        if not part:
-            continue
-        if "-" in part:
-            lo, hi = part.split("-", 1)
-            if hi == "":
-                raise ValueError(f"open-ended range {part!r} not supported; give an explicit end")
-            out.extend(range(int(lo), int(hi) + 1))
-        else:
-            out.append(int(part))
-    return out

@@ -239,21 +239,3 @@ def wordcount_kvjob(df: DataFrame, text_col: str) -> DataFrame:
         out_key_type="string",
         out_value_type="long",
     )
-
-
-def side_input(df: DataFrame, key_col: str, value_col: str):
-    """DistributedCache side-file analog (C/filecache/DistributedCache.java:115):
-    materialize a small table as a broadcast dict for hash-probing inside
-    map_fn — the reference's in-mapper lookup-join idiom.
-
-    Usage::
-
-        lookup = side_input(dim_df, "k", "name")
-        def mapper(row):
-            yield row.k, lookup.value.get(row.k, "?")
-
-    For relational joins prefer ``joins.broadcast_join`` (JVM-side); this
-    exists for imperative map_fn logic that needs point lookups.
-    """
-    data = {r[key_col]: r[value_col] for r in df.select(key_col, value_col).collect()}
-    return df.sparkSession.sparkContext.broadcast(data)

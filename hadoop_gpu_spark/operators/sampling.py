@@ -1,29 +1,25 @@
-"""Scan-level predicates and deterministic samplers.
+"""Deterministic samplers.
 
-Reference: SequenceFileInputFilter (SURVEY.md §2.1) — keep records whose key
-matches a regex (``M/SequenceFileInputFilter.java:103``), hashes into a
-1-in-f sample (PercentFilter, ``:146`` — ``md5_sample`` with another seed:
-any uniform deterministic hash meets its contract), or MD5-buckets into
-1-in-f (MD5Filter, ``:195``); plus InputSampler's split/random/interval samplers
-(``M/lib/InputSampler.java:49,162,251``).
+Reference: SequenceFileInputFilter (SURVEY.md §2.1) — MD5-bucket keys into
+a 1-in-f sample (MD5Filter, ``M/SequenceFileInputFilter.java:195``; a
+PercentFilter, ``:146``, is ``md5_sample`` with another seed: any uniform
+deterministic hash meets its contract). Its RegexFilter (``:103``) is
+Spark's ``rlike``, an unanchored search like Java's ``Matcher.find``.
+``domain_cap`` is a per-key quota sampler in InputSampler's family
+(``M/lib/InputSampler.java:49``).
 
 All deterministic (md5-based, engine-portable) so results are reproducible
 and oracle-checkable — unlike ``df.sample`` whose RNG is engine-private.
-Filters here are plain predicates → Catalyst pushes them into the parquet
-scan (PushedFilters for the regex prefix case; row-group pruning otherwise).
+``md5_sample`` is a plain predicate, so Catalyst pushes it into the
+parquet scan.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_gpu_spark.functions.hashing import bucket
-
-
-def regex_filter(df: DataFrame, col: str, pattern: str) -> DataFrame:
-    """RegexFilter — M/SequenceFileInputFilter.java:103."""
-    return df.filter(F.col(col).rlike(pattern))
 
 
 def md5_sample(df: DataFrame, key_col: str, frequency: int, seed: int = 0) -> DataFrame:
@@ -32,27 +28,6 @@ def md5_sample(df: DataFrame, key_col: str, frequency: int, seed: int = 0) -> Da
     Reference: M/SequenceFileInputFilter.java:195 (MD5(key) % f == 0).
     """
     return df.filter(bucket(key_col, frequency, seed) == 0)
-
-
-def interval_sample(df: DataFrame, order_col: str, interval: int) -> DataFrame:
-    """IntervalSampler — every interval-th record in key order
-    (M/lib/InputSampler.java:251). Deterministic via rank over the ordering.
-
-    Scale note: the global ORDER window funnels the input through one
-    task — acceptable here because the reference's InputSampler is a
-    SPLIT-POINT SAMPLING utility (its output feeds a TotalOrderPartitioner
-    build, its input is already a sample). For corpus-scale every-nth
-    selection use a keyed/deterministic sampler (md5_sample) or
-    total_order_sort's range machinery instead.
-    """
-    from pyspark.sql.window import Window
-
-    w = Window.orderBy(F.col(order_col))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter((F.col("__rn") - 1) % interval == 0)
-        .drop("__rn")
-    )
 
 
 def domain_cap(

@@ -20,16 +20,6 @@ def union_all(sources: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=False), sources)
 
 
-def multi_input_union(sources) -> DataFrame:
-    """MultipleInputs/DelegatingInputFormat (M/lib/MultipleInputs.java:34):
-    each input path gets its own mapper before the union. ``sources`` =
-    list of (df, transform_fn) pairs; transforms must agree on the output
-    schema (checked by unionByName).
-    """
-    transformed = [fn(df) if fn is not None else df for df, fn in sources]
-    return union_all(transformed)
-
-
 def chain(df: DataFrame, *fns) -> DataFrame:
     """ChainMapper/ChainReducer ([MAP+ / REDUCE MAP*], M/lib/ChainMapper.java:90):
     fused single-pass composition — in Spark, plain transform chaining;

@@ -9,41 +9,20 @@ sort-by-count-descending idiom (``X/Grep.java:71-82``).
 
 Spark restatement: ``orderBy`` IS the reference's total-order sort — Spark's
 RangePartitioning samples split points exactly like InputSampler +
-TotalOrderPartitioner, but automatically. Secondary sort =
-``repartition(key).sortWithinPartitions(key, order)``; ranking analytics use
-window functions (beyond-reference — the reference has none, §2.5).
+TotalOrderPartitioner, but automatically (``repartitionByRange`` +
+``sortWithinPartitions`` when the partition count matters; q_total_order_sort
+and q_terasort). Secondary sort is
+``repartition(key).sortWithinPartitions(key, order)`` (q_secondary_sort), and a
+key-field spec is a list of Column sort expressions. This module keeps the
+ranking helpers: the one ``row_number`` window, global and per-group top-k,
+and the per-group fraction cap.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def total_order_sort(df: DataFrame, cols: list[str], num_partitions: int | None = None) -> DataFrame:
-    """Globally sorted output across partitions.
-
-    Equivalent of InputSampler.writePartitionFile + TotalOrderPartitioner +
-    per-partition sort (M/lib/TotalOrderPartitioner.java:84-260). Spark
-    samples range boundaries itself; output partition i is entirely <=
-    partition i+1.
-    """
-    if num_partitions:
-        return df.repartitionByRange(num_partitions, *cols).sortWithinPartitions(*cols)
-    return df.orderBy(*cols)
-
-
-def secondary_sort(df: DataFrame, group_cols: list[str], order_cols: list[Column | str]) -> DataFrame:
-    """Partition by group key, ordered stream per group within partitions.
-
-    Reference: X/SecondarySort.java:51 (FirstPartitioner + composite-key
-    comparator + FirstGroupingComparator). Feed the result to mapPartitions /
-    applyInPandas for the literal ordered-group-stream contract.
-    """
-    return df.repartition(*group_cols).sortWithinPartitions(*group_cols, *order_cols)
 
 
 def ranked_within_group(
@@ -86,49 +65,24 @@ def top_k_per_group(
     return ranked.withColumn("rank", F.col("rank").cast("long")).filter(F.col("rank") <= k)
 
 
-_KEYFIELD_RE = re.compile(r"^-k(\d+)(?:\.(\d+))?(?:,(\d+)(?:\.(\d+))?)?([nr]*)$")
+def top_fraction_per_group(
+    df: DataFrame, group_cols: list[str], order_cols: list[Column], frac: float
+) -> DataFrame:
+    """The first ``ceil(group size * frac)`` rows of each group under the
+    caller's order, each with its 1-based BIGINT position in ``rank``.
 
-
-def key_field_sort_expr(spec: str, field_cols: list[str]) -> list[Column]:
-    """Parse a KeyFieldBasedComparator sort spec into Column order exprs.
-
-    Reference: M/lib/KeyFieldBasedComparator.java:46 — specs like
-    ``-k2,2nr`` (field 2, numeric, reverse). Field numbers are 1-based over
-    ``field_cols``; flags: ``n`` numeric, ``r`` reverse. Character offsets
-    within a field (``-k2.4``) apply substr semantics.
+    The stratified-sample and keep-the-better-half cut: one shuffle on the
+    group key feeds both the ``row_number`` window and the group-size
+    count. The SQL twin is ``ROW_NUMBER() ... <= ceil(COUNT(*) OVER
+    (PARTITION BY group) * frac)``; a ``/ 2.0`` there equals ``frac=0.5``
+    bit for bit, since halving a double is exact. End ``order_cols`` with a
+    unique key, as for :func:`top_k_per_group`.
     """
-    m = _KEYFIELD_RE.match(spec.strip())
-    if not m:
-        raise ValueError(f"bad key-field spec {spec!r}")
-    f1, c1, f2, _c2, flags = m.groups()
-    start = int(f1)
-    end = int(f2) if f2 else start
-    numeric = "n" in (flags or "")
-    reverse = "r" in (flags or "")
-    cols: list[Column] = []
-    for idx in range(start, end + 1):
-        c: Column = F.col(field_cols[idx - 1])
-        if c1 and idx == start and int(c1) > 1:
-            c = F.substring(c.cast("string"), int(c1), 1_000_000)
-        if numeric:
-            c = c.cast("double")
-        cols.append(c.desc() if reverse else c.asc())
-    return cols
-
-
-def sort_validator(df: DataFrame, cols: list[str]) -> bool:
-    """SortValidator / TeraValidate invariant: global order across partitions.
-
-    Reference: X/terasort/TeraValidate.java:52, T/mapred/TestMiniMRDFSSort.
-    Checks each row >= its predecessor via a lag window over the whole
-    ordering (validation-only; fine at test SF).
-    """
-    w = Window.orderBy(*[F.col(c) for c in cols])
-    ordering = F.struct(*[F.col(c) for c in cols])
-    bad = (
-        df.withColumn("__prev", F.lag(ordering).over(w))
-        .filter(F.col("__prev").isNotNull() & (F.col("__prev") > ordering))
-        .limit(1)
-        .count()
+    n = F.count(F.lit(1)).over(Window.partitionBy(*group_cols))
+    ranked = ranked_within_group(df, group_cols, order_cols, "rank")
+    return (
+        ranked.withColumn("rank", F.col("rank").cast("long"))
+        .withColumn("__n", n)
+        .filter(F.col("rank") <= F.ceil(F.col("__n") * frac))
+        .drop("__n")
     )
-    return bad == 0

@@ -2893,14 +2893,10 @@ def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = T(spark, sf_dir, "documents").select("doc_id", "lang")
     key = F.md5(F.encode(F.col("doc_id").cast("string"), "UTF-8"))
-    w = Window.partitionBy("lang").orderBy(key.asc(), F.col("doc_id").asc())
-    wc = Window.partitionBy("lang")
-    return (
-        docs.withColumn("rn", F.row_number().over(w).cast("long"))
-        .withColumn("n_lang", F.count(F.lit(1)).over(wc))
-        .filter(F.col("rn") <= F.ceil(F.col("n_lang") * 0.1))
-        .select("doc_id", "lang", F.col("rn").alias("sample_rank"))
+    sample = sort_ops.top_fraction_per_group(
+        docs, ["lang"], [key.asc(), F.col("doc_id").asc()], 0.1
     )
+    return sample.select("doc_id", "lang", F.col("rank").alias("sample_rank"))
 
 
 # ---------------------------------------------------------------------------
@@ -3040,14 +3036,10 @@ def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.select(
         "doc_id", "lang", F.round(tx.quality_score("text"), 9).alias("quality")
     )
-    w = Window.partitionBy("lang").orderBy(F.col("quality").desc(), F.col("doc_id").asc())
-    wc = Window.partitionBy("lang")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_lang", F.count(F.lit(1)).over(wc))
-        .filter(F.col("rn") <= F.ceil(F.col("n_lang") / 2.0))
-        .select("doc_id", "lang", "quality")
+    kept = sort_ops.top_fraction_per_group(
+        scored, ["lang"], [F.col("quality").desc(), F.col("doc_id").asc()], 0.5
     )
+    return kept.select("doc_id", "lang", "quality")
 
 
 # ---------------------------------------------------------------------------
@@ -3814,12 +3806,8 @@ def q_pretrain_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         md5_hex("text").alias("h"),
         F.size(tokenize(F.col("text"))).cast("long").alias("n_toks"),
     )
-    w = Window.partitionBy("lang").orderBy(F.col("q").desc(), F.col("doc_id").asc())
-    wc = Window.partitionBy("lang")
-    kept = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .withColumn("n_lang", F.count(F.lit(1)).over(wc))
-        .filter(F.col("rn") <= F.ceil(F.col("n_lang") / 2.0))
+    kept = sort_ops.top_fraction_per_group(
+        scored, ["lang"], [F.col("q").desc(), F.col("doc_id").asc()], 0.5
     )
     surv = kept.groupBy("h").agg(
         F.min_by("lang", "doc_id").alias("lang"),

@@ -83,21 +83,6 @@ def test_run_hybrid_no_gpu_falls_back(spark):
     assert out == [2 * i for i in range(50)]
 
 
-def test_resource_profile_helpers(spark):
-    from hadoop_gpu_spark.hybrid.resources import (
-        apply_profile,
-        cluster_supports_gpu_scheduling,
-        gpu_task_profile,
-    )
-
-    # local mode: construction works, scheduling unsupported, apply = no-op
-    profile = gpu_task_profile(cpus_per_task=1, gpus_per_task=1.0)
-    assert profile is not None
-    assert cluster_supports_gpu_scheduling(spark) is False
-    df = spark.range(10)
-    assert apply_profile(df, profile).count() == 10
-
-
 def test_cpu_gate_matches_reference_condition():
     # JobQueueTaskScheduler.java:265: CPU assignment happens iff
     # pendingMapLoad >= alpha * trackerGPUMapCapacity.

@@ -7,7 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from hadoop_gpu_spark.ml.kmeans import kmeans_dataframe, kmeans_grouped, lloyd_numpy
-from hadoop_gpu_spark.ml.matmul import matmul_blocked, matmul_cells
+from hadoop_gpu_spark.ml.matmul import matmul_blocked
 from hadoop_gpu_spark.tables import load_table
 
 
@@ -163,17 +163,6 @@ def test_kmeans_grouped_reference_semantics(spark):
 
 def test_matmul_cells_and_blocked_match_numpy(spark):
     rng = np.random.default_rng(3)
-    t = 8
-    cells = [
-        (i, j, rng.normal(size=t).tolist(), rng.normal(size=t).tolist())
-        for i in range(3)
-        for j in range(3)
-    ]
-    df = spark.createDataFrame(cells, ["i", "j", "a", "b"])
-    out = {(r["i"], r["j"]): r["c"] for r in matmul_cells(df).collect()}
-    for i, j, a, b in cells:
-        assert abs(out[(i, j)] - float(np.dot(a, b))) < 1e-9
-
     # blocked: C = A @ B with 2x2 grid of m×m blocks
     m, grid = 4, 2
     A = rng.normal(size=(grid * m, grid * m))

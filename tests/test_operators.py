@@ -1,6 +1,5 @@
 """Operator-level unit tests mirroring the reference's test styles
-(SURVEY.md §5): golden expectations, join consistency (TestDatamerge),
-sort-validator invariants (TestMiniMRDFSSort)."""
+(SURVEY.md §5): golden expectations and join consistency (TestDatamerge)."""
 
 from __future__ import annotations
 
@@ -135,22 +134,6 @@ def test_asof_join_null_keys_match_nothing(spark):
     assert fwd == {"probe": "late", "null_t": None, "null_g": None}, fwd
 
 
-def test_total_order_sort_validator(spark, sf_dir):
-    from hadoop_gpu_spark.tables import load_table
-
-    orders = load_table(spark, "orders", sf_dir)
-    out = sort.total_order_sort(orders, ["o_totalprice"], num_partitions=4)
-    assert sort.sort_validator(out, ["o_totalprice"])
-
-
-def test_key_field_sort_spec(spark):
-    df = spark.createDataFrame([("a", "10"), ("b", "9"), ("c", "100")], ["f1", "f2"])
-    # -k2,2nr → field 2 numeric reverse
-    cols = sort.key_field_sort_expr("-k2,2nr", ["f1", "f2"])
-    got = [r["f1"] for r in df.orderBy(*cols).collect()]
-    assert got == ["c", "a", "b"]  # 100, 10, 9 numeric desc (lexical would differ)
-
-
 def test_top_k_per_group(spark):
     df = spark.createDataFrame([(g, v) for g in range(3) for v in range(10)], ["g", "v"])
     out = sort.top_k_per_group(df, ["g"], [F.col("v").desc()], 2)
@@ -176,56 +159,6 @@ def test_samplers_deterministic_and_partition(spark, sf_dir):
     # different seeds → different (deterministic) samples
     p = md5_sample(li, "l_orderkey", 16, seed=1).count()
     assert p != s1 or p > 0
-
-
-def test_regex_filter_matches_python_re(spark):
-    # RegexFilter (M/SequenceFileInputFilter.java:103): rlike is an
-    # UNANCHORED search, like Java Matcher.find — pin against python
-    # re.search on the shared Java/RE2 subset.
-    import re
-
-    from hadoop_gpu_spark.operators.sampling import regex_filter
-
-    keys = ["alpha_1", "beta_22", "gamma", "ALPHA_3", "a1b2", ""]
-    df = spark.createDataFrame([(k,) for k in keys], "k string")
-    for pattern in [r"^alpha", r"[0-9]+", r"a.b", r"^$"]:
-        got = {r["k"] for r in regex_filter(df, "k", pattern).collect()}
-        want = {k for k in keys if re.search(pattern, k)}
-        assert got == want, (pattern, got, want)
-
-
-def test_interval_sample_every_nth_in_key_order(spark):
-    # IntervalSampler (M/lib/InputSampler.java:251): every interval-th
-    # record in ORDER-COLUMN order, starting from the first, no matter
-    # how the input rows arrive.
-    from hadoop_gpu_spark.operators.sampling import interval_sample
-
-    rows = [(k,) for k in [7, 3, 11, 1, 9, 5, 13, 15, 2, 8]]
-    df = spark.createDataFrame(rows, "k int").repartition(4)
-    got = sorted(r["k"] for r in interval_sample(df, "k", 3).collect())
-    want = sorted(sorted(k for (k,) in rows)[::3])
-    assert got == want
-    # interval=1 keeps everything; interval > n keeps only the first
-    assert interval_sample(df, "k", 1).count() == len(rows)
-    assert [r["k"] for r in interval_sample(df, "k", 100).collect()] == [1]
-
-
-def test_secondary_sort_stream_order(spark):
-    # FIXTURES.md §4 kv_pairs contract: within each k1 group (one partition),
-    # rows arrive ordered by k2.
-    rows = [(k1, k2, k1 * 100 + k2) for k1 in range(4) for k2 in (3, 1, 2, 0)]
-    df = spark.createDataFrame(rows, ["k1", "k2", "v"])
-    out = sort.secondary_sort(df, ["k1"], ["k2"])
-
-    def check(it):
-        import pandas as pd_
-
-        for pdf in it:
-            g = pdf.groupby("k1")["k2"].apply(lambda s: list(s) == sorted(s))
-            yield pd_.DataFrame({"ok": [bool(g.all())]})
-
-    res = out.mapInPandas(check, schema="ok boolean").collect()
-    assert all(r["ok"] for r in res)
 
 
 def test_join_expression_language(spark):
@@ -416,18 +349,6 @@ def test_connected_components_driver_path_matches_distributed(spark, monkeypatch
         monkeypatch.undo()
         assert fast == slow, (rows[:3], mi)
     assert fast == sorted([(1, 1), (2, 1), (3, 1), (5, 5), (None, None)], key=repr)
-
-
-def test_parse_field_spec():
-    import pytest as _pytest
-
-    from hadoop_gpu_spark.operators.fields import parse_field_spec
-
-    assert parse_field_spec("0-2:4") == [0, 1, 2, 4]
-    assert parse_field_spec("3") == [3]
-    assert parse_field_spec("1:0") == [1, 0]  # reorder preserved
-    with _pytest.raises(ValueError):
-        parse_field_spec("3-")
 
 
 def test_sequence_pack_deterministic_across_sessions(spark, sf_dir):

@@ -845,13 +845,6 @@ ALLOWED_GLOBAL_WINDOWS = {
         "(1e11 rows at 256/bucket -> ~95k rows in the one task); the "
         "shared shape q_sequence_pack and q_total_order_sort funnel "
         "their ONLY global window through",
-    ("operators/sampling.py", "interval_sample"):
-        "InputSampler contract: the input IS a sample (split-point "
-        "sampling utility) — docstring directs corpus-scale callers "
-        "to md5_sample / total_order_sort instead",
-    ("operators/sort.py", "sort_validator"):
-        "TeraValidate-style VALIDATION utility (boolean, test-scale "
-        "by contract per docstring) — not a registered query path",
     ("queries.py", "q_terasort"):
         "rank over gen_tera_records(_TERA_N) — bounded by the gate's "
         "literal row count, not by any input table",

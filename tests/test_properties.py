@@ -9,7 +9,6 @@ from hypothesis import strategies as st
 
 from hadoop_gpu_spark.hybrid import makespan_split
 from hadoop_gpu_spark.operators.join_expr import parse_join_expr
-from hadoop_gpu_spark.operators.sort import key_field_sort_expr
 
 
 @given(
@@ -55,20 +54,6 @@ def test_join_expr_parser_total_on_valid_grammar(expr):
         return f"{n.op}({','.join(render(a) for a in n.args)})"
 
     assert render(node) == expr.replace(" ", "")
-
-
-@given(
-    f1=st.integers(1, 3),
-    f2=st.integers(1, 3),
-    flags=st.sampled_from(["", "n", "r", "nr"]),
-)
-@settings(max_examples=50, deadline=None)
-def test_key_field_spec_parser(spark, f1, f2, flags):
-    # Column construction needs an active SparkContext (classic pyspark).
-    lo, hi = min(f1, f2), max(f1, f2)
-    spec = f"-k{lo},{hi}{flags}"
-    cols = key_field_sort_expr(spec, ["a", "b", "c"])
-    assert len(cols) == hi - lo + 1
 
 
 @given(i=st.integers(min_value=-(2**62), max_value=2**62))

@@ -3,7 +3,6 @@ from __future__ import annotations
 import os
 
 from hadoop_gpu_spark import sources
-from hadoop_gpu_spark.operators import sort
 
 
 def test_fixed_width_tera(spark):
@@ -13,15 +12,6 @@ def test_fixed_width_tera(spark):
     # deterministic across invocations
     again = sources.gen_tera_records(spark, 100).collect()
     assert sorted(r["key"] for r in rows) == sorted(r["key"] for r in again)
-
-
-def test_terasort_pipeline(spark, tmp_path):
-    # TeraGen → total-order sort → TeraValidate (X/terasort, TestMiniMRDFSSort)
-    tera = sources.gen_tera_records(spark, 500)
-    out = sort.total_order_sort(tera, ["key"], num_partitions=4)
-    assert sort.sort_validator(out, ["key"])
-    # checksum preserved (record multiset unchanged)
-    assert out.count() == 500
 
 
 def test_jdbc_derby_roundtrip(spark, tmp_path):
